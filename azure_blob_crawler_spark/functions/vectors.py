@@ -27,7 +27,10 @@ def norm(a: Column) -> Column:
 
 
 def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
+    """Cosine similarity; 0.0 when either vector has zero norm (a zero
+    vector has no direction, and dividing by its norm raises under ANSI)."""
+    denom = norm(a) * norm(b)
+    return F.when(denom == 0, F.lit(0.0)).otherwise(dot(a, b) / denom)
 
 
 def cosine_sql(a: str, b: str) -> str:

@@ -35,76 +35,28 @@ def _tokens(col):
     return F.regexp_extract_all(F.lower(col), F.lit(TOKEN_PATTERN), 0)
 
 
-def bm25_scores(
-    chunks: DataFrame,
-    query: str,
-    content_col: str = "content",
-    id_col: str = "chunk_id",
-    manage_cache: bool = True,
-) -> DataFrame:
-    """(id, score) for every chunk containing ≥1 query term — the full BM25
-    score set, no top-k (its exact DuckDB twin backs the q_bm25_search
-    oracle; reference scoring surface: search_client.py:351-374).
-
-    Scale shape: one groupBy(id) over exploded postings of the *query terms
-    only* (the term filter prunes before the shuffle), then a broadcast join
-    of per-term document frequencies.
-
-    Cache discipline (round-1 advice): the per-query (id, tokens)
-    projection is cached for the stats + postings passes and released
-    (blocking) before return; the matching-rows postings set is the only
-    materialized remnant (an eager localCheckpoint both downstream
-    consumers read), so repeated queries in a long-lived session don't
-    accumulate cached corpus partitions. ``manage_cache=True`` additionally
-    fans out a scan-shaped corpus (cached callers own their
-    partitioning)."""
-    q_terms = [t for t in _py_tokens(query)]
-    if not q_terms:
-        return chunks.select(id_col).limit(0).withColumn("score", F.lit(0.0))
-    from azure_blob_crawler_spark.parallel import fan_out
-
-    if manage_cache:
-        # fan_out: a single-row-group corpus file otherwise tokenizes on one
-        # task (manage_cache callers pass a scan-shaped corpus; cached
-        # callers own their partitioning)
-        chunks = fan_out(chunks)
-    # tokenize ONCE into a cached (id, tokens) projection: the stats pass
-    # and the postings pass both read it, so the tokenizer runs exactly
-    # once per query (r5 ran it three times: count-adjacent avg pass,
-    # size() and explode())
-    tokd = chunks.select(
-        F.col(id_col).alias(id_col), _tokens(F.col(content_col)).alias("__ts")
-    ).persist()
-    # ONE stats pass (count + avg token length in the same job; the
-    # arithmetic of each aggregate is unchanged) instead of the former
-    # count() + avg() pair — guide §1.2: fewer passes first
-    stats = tokd.agg(
-        F.count(F.lit(1)).alias("n"), F.avg(F.size("__ts")).alias("a")
-    ).collect()[0]
-    n_docs = int(stats["n"])
-    avg_len = stats["a"] or 1.0
-    terms_lit = F.array(*[F.lit(t) for t in set(q_terms)])
-    # prune to the query's terms INSIDE the array and explode only the
-    # survivors: the Generate feeds ~|matches| rows downstream instead of
-    # |all tokens| (identical semantics — a doc with no matching term
-    # vanishes either way, doc_len is the full token count)
-    postings = (
-        tokd.select(
-            id_col,
-            F.size("__ts").alias("doc_len"),
-            F.explode(F.filter("__ts", lambda t: F.array_contains(terms_lit, t))).alias(
-                "term"
-            ),
-        )
+def _postings(toks: DataFrame, id_col: str, terms: list[str] | None = None) -> DataFrame:
+    """(id, term, doc_len, tf) from a tokenized (id, __ts) frame — the one
+    postings builder: the scan tier builds postings per query (``terms``
+    prunes each token array to the query terms before the explode, so
+    ~|matches| rows reach the shuffle; ``doc_len`` stays the full token
+    count), the index tier builds them once per delta and stores them."""
+    ts = F.col("__ts")
+    if terms is not None:
+        terms_lit = F.array(*[F.lit(t) for t in terms])
+        ts = F.filter(ts, lambda t: F.array_contains(terms_lit, t))
+    return (
+        toks.select(id_col, F.size("__ts").alias("doc_len"), F.explode(ts).alias("term"))
         .groupBy(id_col, "term", "doc_len")
-        .agg(F.count("*").alias("tf"))
-        # materialize the (tiny) postings set once: df-by-term and scoring
-        # both read it, which previously re-tokenized the corpus per branch
-        .localCheckpoint(eager=True)
+        .agg(F.count(F.lit(1)).alias("tf"))
     )
-    # blocking: the token cache must be gone before the caller's next
-    # query, not whenever the async unpersist lands (cache-discipline test)
-    tokd.unpersist(blocking=True)
+
+
+def _bm25(postings: DataFrame, n_docs: int, avg_len: float, id_col: str) -> DataFrame:
+    """(id, score) = Σ over a doc's postings of idf · tf-norm — the one BM25
+    formula, fed by on-the-fly postings (scan tier) or stored ones (index
+    tier). Per-term document frequencies are a tree-aggregated groupBy
+    broadcast back onto the postings."""
     df_by_term = postings.groupBy("term").agg(F.countDistinct(id_col).alias("df"))
     idf = F.log(
         (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
@@ -121,13 +73,34 @@ def bm25_scores(
     )
 
 
+def bm25_scores(
+    chunks: DataFrame,
+    query: str,
+    content_col: str = "content",
+    id_col: str = "chunk_id",
+) -> DataFrame:
+    """(id, score) for every chunk containing ≥1 query term — the full BM25
+    score set, no top-k (its exact DuckDB twin backs the q_bm25_search
+    oracle; reference scoring surface: search_client.py:351-374).
+
+    The scan tier: one stats job (document count + average token length),
+    then postings of the *query terms only* built on the fly and scored."""
+    q_terms = sorted(set(_py_tokens(query)))
+    if not q_terms:
+        return chunks.select(id_col).limit(0).withColumn("score", F.lit(0.0))
+    toks = chunks.select(F.col(id_col), _tokens(F.col(content_col)).alias("__ts"))
+    stats = toks.agg(
+        F.count(F.lit(1)).alias("n"), F.avg(F.size("__ts")).alias("a")
+    ).collect()[0]
+    return _bm25(_postings(toks, id_col, q_terms), int(stats["n"]), stats["a"] or 1.0, id_col)
+
+
 def text_search(
     chunks: DataFrame,
     query: str,
     top: int | None = config.DEFAULT_TOP,
     content_col: str = "content",
     id_col: str = "chunk_id",
-    _caller_cached: bool = False,
     index=None,
 ) -> DataFrame:
     """BM25 top-k over the chunk corpus with full chunk columns + ``score``.
@@ -136,26 +109,19 @@ def text_search(
     ``index`` (a TextSearchIndex) serves the scores from the persistent
     postings+stats tables instead of tokenizing the corpus — the 100-TB
     serving path; ``chunks`` is then only the projection source for the
-    result join. Cache discipline: the corpus is persisted for the scoring
-    passes and released once the small (id, score) set is materialized; the
-    final projection join replays the corpus lineage exactly once.
-    ``_caller_cached=True`` means the caller owns the persist lifecycle
-    (hybrid_search does)."""
+    result join. The small (id, score) set is materialized before the
+    projection join, which broadcasts it."""
     if index is not None:
         scored = index.bm25(query)
         if id_col != "chunk_id":
             scored = scored.withColumnRenamed("chunk_id", id_col)
     else:
-        if not _caller_cached:
-            chunks = chunks.persist()
-        scored = bm25_scores(chunks, query, content_col, id_col, manage_cache=False)
+        scored = bm25_scores(chunks, query, content_col, id_col)
     if top is not None:
         scored = scored.orderBy(F.desc("score"), F.asc(id_col)).limit(
             min(top, config.MAX_TOP)
         )
     top_k = scored.localCheckpoint(eager=True)
-    if index is None and not _caller_cached:
-        chunks.unpersist()
     out = chunks.join(F.broadcast(top_k), id_col, "inner")
     return out.orderBy(F.desc("score"), F.asc(id_col))
 
@@ -210,69 +176,56 @@ def hybrid_search(
     across engines/arithmetic orders — the determinism knob the DuckDB
     oracle relies on (ties then break on id in both engines). ``index``
     routes the text leg through the persistent TextSearchIndex (no corpus
-    tokenization in the plan).
+    tokenization in the plan)."""
+    # Legs are bare (id, score) sets: only the fused top joins back onto the
+    # chunk rows. The index tier's text leg gets text_search(index=)'s
+    # membership in ``chunks`` as a semi-join after the same pool limit.
+    cap = min(pool, config.MAX_TOP) if pool is not None else None
 
-    Cache discipline mirrors ``text_search``: the corpus is persisted for
-    the two ranking legs, the fused ≤top (id, score) set is materialized,
-    the cache is released, and the projection join replays lineage once."""
-    chunks = chunks.persist()  # consumed by both rankers + the result join
-    # Leg scores are computed DIRECTLY as (id, score) sets — the former
-    # text_search/vector_search calls joined the scores back onto the full
-    # corpus row and sorted it, only for the rank step to project (id,
-    # score) back out: a wasted broadcast join + sort per leg (r6 plan
-    # audit). Values are unchanged — the same scorer runs on the same
-    # input, and for the index tier the same inner-join-with-chunks
-    # membership is applied (as a semi-join) after the same pool limit.
+    def pooled(scores: DataFrame) -> DataFrame:
+        if cap is None:
+            return scores
+        return scores.orderBy(F.desc("score"), F.asc(id_col)).limit(cap)
+
     if index is not None:
         tscore = index.bm25(query_text)
         if id_col != "chunk_id":
             tscore = tscore.withColumnRenamed("chunk_id", id_col)
+        tscore = pooled(tscore).join(chunks.select(id_col), id_col, "left_semi")
     else:
-        tscore = bm25_scores(chunks, query_text, content_col, id_col, manage_cache=False)
-    if pool is not None:
-        tscore = tscore.orderBy(F.desc("score"), F.asc(id_col)).limit(
-            min(pool, config.MAX_TOP)
-        )
-    if index is not None:
-        tscore = tscore.join(chunks.select(id_col), id_col, "left_semi")
-    t = tscore.select(id_col, "score").localCheckpoint(eager=True)
+        tscore = pooled(bm25_scores(chunks, query_text, content_col, id_col))
 
     if query_vector is None:
         query_vector = embed_query(query_text, embed_dim)
     qv = F.array(*[F.lit(float(x)) for x in query_vector])
-    vscore = chunks.select(id_col, cosine(F.col(vector_col), qv).alias("score"))
-    if pool is not None:
-        vscore = vscore.orderBy(F.desc("score"), F.asc(id_col)).limit(
-            min(pool, config.MAX_TOP)
-        )
-    v = vscore.select(id_col, "score").localCheckpoint(eager=True)
+    vscore = pooled(chunks.select(id_col, cosine(F.col(vector_col), qv).alias("score")))
 
     rank_key = (
         F.round(F.col("score"), rank_rounding) if rank_rounding is not None
         else F.col("score")
     )
-    # global leg ranks via the two-phase sequence operator: the pool=None
-    # (full-corpus, oracle-determinism) configuration no longer funnels the
-    # whole corpus through one window task; pooled legs keep the bounded
-    # single-task sort. The legs are checkpointed above, so a cheap count
-    # turns a small leg (the common case — score sets are ∝ matching docs,
-    # not corpus) into the constant-partition window instead of the
-    # two-phase machinery's extra jobs; a big leg still two-phases with its
-    # input already materialized. The assigned ranks are identical either
-    # way (assign_global_seq contract).
     order = [rank_key.desc(), F.asc(id_col)]
-    tr = assign_global_seq(
-        t, order, "rank_text",
-        bounded_rows=pool if pool is not None else t.count(),
-        input_materialized=True,
-    ).select(id_col, "rank_text")
-    vr = assign_global_seq(
-        v, order, "rank_vec",
-        bounded_rows=pool if pool is not None else v.count(),
-        input_materialized=True,
-    ).select(id_col, "rank_vec")
+
+    def ranked(leg: DataFrame, rank_col: str) -> DataFrame:
+        # A pooled leg is bounded by its limit, so assign_global_seq ranks
+        # it in one single-task window straight off the lineage. A
+        # full-corpus leg (pool=None, oracle determinism) is materialized
+        # once: a cheap count then picks the single window for a small leg
+        # (score sets are ∝ matching docs, not corpus) and a big leg
+        # two-phases over the materialized input. Ranks are identical
+        # either way (assign_global_seq contract).
+        leg = leg.select(id_col, "score")
+        if cap is None:
+            leg = leg.localCheckpoint(eager=True)
+        return assign_global_seq(
+            leg, order, rank_col,
+            bounded_rows=cap if cap is not None else leg.count(),
+            input_materialized=cap is None,
+        ).select(id_col, rank_col)
+
     fused = (
-        tr.join(vr, id_col, "full_outer")
+        ranked(tscore, "rank_text")
+        .join(ranked(vscore, "rank_vec"), id_col, "full_outer")
         .withColumn(
             "score",
             F.coalesce(1.0 / (F.lit(rrf_k) + F.col("rank_text")), F.lit(0.0))
@@ -285,7 +238,6 @@ def hybrid_search(
         .limit(min(top, config.MAX_TOP))
         .localCheckpoint(eager=True)
     )
-    chunks.unpersist()
     out = chunks.join(F.broadcast(fused_top), id_col, "inner")
     return out.orderBy(F.desc("score"), F.asc(id_col))
 

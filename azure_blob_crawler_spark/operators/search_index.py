@@ -33,19 +33,22 @@ full-corpus input (round-4 verdict item 3).
 
 Query cost at 100 TB: ∝ postings of the query's terms (bucket-pruned scan),
 plus — only when dirty — a join against the candidate chunks' doc rows.
-Never a corpus scan, never a tokenization pass. The previous serving path
-(operators/query.bm25_scores) tokenized the entire corpus twice per query;
-it remains as the index-free one-shot tier and as the oracle for this one
-(tests pin score equality across update/delete histories).
+Never a corpus scan, never a tokenization pass. Both tiers share one BM25
+core (operators/query ``_postings`` + ``_bm25``): the scan tier
+(operators/query.bm25_scores) builds a query's postings by tokenizing the
+corpus, this tier reads them from the store. The scan tier remains the
+index-free one-shot path and the oracle for this one (tests pin score
+equality across update/delete histories).
 """
 
 from __future__ import annotations
 
+from contextlib import contextmanager
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from azure_blob_crawler_spark.functions.text import TOKEN_PATTERN
-from azure_blob_crawler_spark.operators.query import BM25_B, BM25_K1, _py_tokens, _tokens
+from azure_blob_crawler_spark.operators.query import _bm25, _postings, _py_tokens, _tokens
 from azure_blob_crawler_spark.sources.store import SnapshotStore
 
 
@@ -90,61 +93,39 @@ class TextSearchIndex:
         the fan-out for small deltas (parallel.fan_out rows_hint)."""
         prev = self._summary()
         gen = int(prev.get("gen", 0)) + 1
-        toks = self._toks(chunks, id_col, content_col, approx_rows).persist()
-        doc_rows = toks.select(
-            "chunk_id", F.size("__ts").alias("doc_len"), F.lit(gen).alias("gen"),
-            self._tb_mask_expr().alias("tb_mask"),
-        ).persist()
-        delta_n, delta_sum = self._agg_len(doc_rows)
+        with self._index_rows(
+            chunks, id_col, content_col, gen, approx_rows
+        ) as (doc_rows, post_rows):
+            delta_n, delta_sum = self._agg_len(doc_rows)
+            if not self.exists():
+                self._create(doc_rows, post_rows, {
+                    "gen": gen, "n_docs": delta_n, "sum_len": delta_sum, "dirty": False,
+                })
+                return self.store.summary(self.docs)
 
-        post_rows = (
-            toks.select("chunk_id", F.size("__ts").alias("doc_len"), F.explode("__ts").alias("term"))
-            .groupBy("term", "chunk_id", "doc_len")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .withColumn("gen", F.lit(gen))
-            .select("term", "chunk_id", "tf", "doc_len", "gen")
-        )
+            # replaced chunks' old lengths + term-bucket masks, via a
+            # bucket-pruned docs read (∝ delta)
+            old_n, old_sum, old_mask = 0, 0, 0
+            touched = self._bucket_ids(doc_rows, self.docs)
+            old = self.store.read_buckets(self.docs, touched)
+            if old is not None:
+                old_rows = old.join(doc_rows.select("chunk_id"), "chunk_id", "leftsemi")
+                old_n, old_sum, old_mask = self._agg_len_mask(old_rows)
 
-        if not self.exists():
-            self.store.create(
-                self.docs, doc_rows, key="chunk_id", n_buckets=self.n_doc_buckets,
-                summary={"gen": gen, "n_docs": delta_n, "sum_len": delta_sum,
-                         "dirty": False},
-            )
-            self.store.create(
-                self.postings, post_rows, key=["term", "chunk_id"],
-                n_buckets=self.n_term_buckets, bucket_by="term",
-            )
-            doc_rows.unpersist()
-            toks.unpersist()
-            return self.store.summary(self.docs)
-
-        # replaced chunks' old lengths + term-bucket masks, via a
-        # bucket-pruned docs read (∝ delta)
-        old_n, old_sum, old_mask = 0, 0, 0
-        touched = self._bucket_ids(doc_rows, self.docs)
-        old = self.store.read_buckets(self.docs, touched)
-        if old is not None:
-            old_rows = old.join(doc_rows.select("chunk_id"), "chunk_id", "leftsemi")
-            old_n, old_sum, old_mask = self._agg_len_mask(old_rows)
-
-        summary = {
-            "gen": gen,
-            "n_docs": int(prev.get("n_docs", 0)) - old_n + delta_n,
-            "sum_len": int(prev.get("sum_len", 0)) - old_sum + delta_sum,
-            # a replacing update can strand old-gen postings (vanished
-            # terms) — from here on queries must gen-validate; the stale
-            # rows can live only in the replaced docs' term buckets
-            "dirty": bool(prev.get("dirty", False)) or old_n > 0,
-            "dirty_pb": self._accumulate_dirty_pb(
-                prev, old_mask if old_n > 0 else 0
-            ),
-        }
-        self.store.merge(self.postings, post_rows)
-        out = self.store.merge(self.docs, doc_rows, summary=summary)
-        doc_rows.unpersist()
-        toks.unpersist()
-        return out
+            summary = {
+                "gen": gen,
+                "n_docs": int(prev.get("n_docs", 0)) - old_n + delta_n,
+                "sum_len": int(prev.get("sum_len", 0)) - old_sum + delta_sum,
+                # a replacing update can strand old-gen postings (vanished
+                # terms) — from here on queries must gen-validate; the stale
+                # rows can live only in the replaced docs' term buckets
+                "dirty": bool(prev.get("dirty", False)) or old_n > 0,
+                "dirty_pb": self._accumulate_dirty_pb(
+                    prev, old_mask if old_n > 0 else 0
+                ),
+            }
+            self.store.merge(self.postings, post_rows)
+            return self.store.merge(self.docs, doc_rows, summary=summary)
 
     def rebuild(
         self, chunks: DataFrame, id_col: str = "chunk_id", content_col: str = "content"
@@ -156,22 +137,47 @@ class TextSearchIndex:
         long-lived index accumulating stale postings (Azure Search parity:
         index rebuild via full re-upload); old versions stay time-travelable
         until expire_snapshots."""
-        gen = self._next_gen_for_rebuild()
-        toks = self._toks(chunks, id_col, content_col).persist()
+        gen = int(self._summary().get("gen", 0)) + 1
+        with self._index_rows(chunks, id_col, content_col, gen) as (doc_rows, post_rows):
+            n, s = self._agg_len(doc_rows)
+            summary = {"gen": gen, "n_docs": n, "sum_len": s, "dirty": False,
+                       "dirty_pb": []}
+            self._create(doc_rows, post_rows, summary)
+        return summary
+
+    @contextmanager
+    def _index_rows(
+        self, chunks: DataFrame, id_col: str, content_col: str, gen: int,
+        approx_rows: int | None = None,
+    ):
+        """Yields (doc_rows, post_rows) of a chunk delta at generation
+        ``gen``: docs rows (chunk_id, doc_len, gen, tb_mask) and postings
+        rows (term, chunk_id, tf, doc_len, gen) from ONE cached tokenizer
+        pass, released on exit. The delta is fanned out first (a
+        single-row-group delta otherwise tokenizes on one task; no-op when
+        it already carries enough partitions or is known-small)."""
+        from azure_blob_crawler_spark.parallel import fan_out
+
+        toks = fan_out(
+            chunks.select(
+                F.col(id_col).alias("chunk_id"), F.col(content_col).alias("__content")
+            ),
+            rows_hint=approx_rows,
+        ).select("chunk_id", _tokens(F.col("__content")).alias("__ts")).persist()
         doc_rows = toks.select(
             "chunk_id", F.size("__ts").alias("doc_len"), F.lit(gen).alias("gen"),
             self._tb_mask_expr().alias("tb_mask"),
         ).persist()
-        n, s = self._agg_len(doc_rows)
-        post_rows = (
-            toks.select("chunk_id", F.size("__ts").alias("doc_len"), F.explode("__ts").alias("term"))
-            .groupBy("term", "chunk_id", "doc_len")
-            .agg(F.count(F.lit(1)).alias("tf"))
-            .withColumn("gen", F.lit(gen))
-            .select("term", "chunk_id", "tf", "doc_len", "gen")
+        post_rows = _postings(toks, "chunk_id").select(
+            "term", "chunk_id", "tf", "doc_len", F.lit(gen).alias("gen")
         )
-        summary = {"gen": gen, "n_docs": n, "sum_len": s, "dirty": False,
-                   "dirty_pb": []}
+        try:
+            yield doc_rows, post_rows
+        finally:
+            doc_rows.unpersist()
+            toks.unpersist()
+
+    def _create(self, doc_rows: DataFrame, post_rows: DataFrame, summary: dict) -> None:
         self.store.create(
             self.docs, doc_rows, key="chunk_id", n_buckets=self.n_doc_buckets,
             summary=summary,
@@ -180,30 +186,6 @@ class TextSearchIndex:
             self.postings, post_rows, key=["term", "chunk_id"],
             n_buckets=self.n_term_buckets, bucket_by="term",
         )
-        doc_rows.unpersist()
-        toks.unpersist()
-        return summary
-
-    def _toks(
-        self, chunks: DataFrame, id_col: str, content_col: str,
-        approx_rows: int | None = None,
-    ) -> DataFrame:
-        """(chunk_id, __ts) tokenization of the delta — fanned out (a
-        single-row-group delta otherwise tokenizes on one task; no-op when
-        the delta already carries enough partitions or is known-small) and
-        persisted by the caller so doc_rows and post_rows share ONE
-        tokenizer pass."""
-        from azure_blob_crawler_spark.parallel import fan_out
-
-        return fan_out(
-            chunks.select(
-                F.col(id_col).alias("chunk_id"), F.col(content_col).alias("__content")
-            ),
-            rows_hint=approx_rows,
-        ).select("chunk_id", _tokens(F.col("__content")).alias("__ts"))
-
-    def _next_gen_for_rebuild(self) -> int:
-        return int(self._summary().get("gen", 0)) + 1
 
     def vacuum(self) -> dict:
         """Bucket-local de-staling: purge postings whose (chunk_id, gen) no
@@ -274,13 +256,13 @@ class TextSearchIndex:
 
     def bm25(self, query: str) -> DataFrame:
         """(chunk_id, score) for every chunk matching ≥1 query term — the
-        exact arithmetic of operators/query.bm25_scores served from the
-        stored index: the postings scan touches only the query terms'
-        buckets, corpus stats come from the snapshot summary, and no text
-        column is read anywhere in the plan. On a clean (append-only)
-        index this is ONE job over the pruned postings; after a replacing
-        update/delete a gen-validity join against the candidates' doc rows
-        is added."""
+        shared BM25 core (operators/query._bm25) over stored postings: the
+        postings scan touches only the query terms' buckets, corpus stats
+        come from the snapshot summary, and no text column is read anywhere
+        in the plan. On a clean (append-only) index the plan reads the
+        pruned postings only, with no driver-side job before it; after a
+        replacing update/delete a gen-validity join against the
+        candidates' doc rows is added."""
         q_terms = sorted(set(_py_tokens(query)))
         summ = self._summary()
         n_docs, sum_len = int(summ.get("n_docs", 0)), int(summ.get("sum_len", 0))
@@ -320,22 +302,7 @@ class TextSearchIndex:
         else:
             valid = cand
 
-        # per-term document frequency: tree-aggregated groupBy (no single
-        # hot window task for stop-word-grade terms), broadcast back
-        df_by_term = valid.groupBy("term").agg(F.countDistinct("chunk_id").alias("df"))
-        idf = F.log(
-            (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
-        )
-        tf_norm = (F.col("tf") * (BM25_K1 + 1)) / (
-            F.col("tf")
-            + BM25_K1 * (1 - BM25_B + BM25_B * F.col("doc_len") / F.lit(float(avg_len)))
-        )
-        return (
-            valid.join(F.broadcast(df_by_term), "term")
-            .withColumn("term_score", idf * tf_norm)
-            .groupBy("chunk_id")
-            .agg(F.sum("term_score").alias("score"))
-        )
+        return _bm25(valid, n_docs, avg_len, "chunk_id")
 
     # --- helpers -------------------------------------------------------------
 
@@ -409,7 +376,3 @@ class TextSearchIndex:
             .collect()[0]
         )
         return sorted(row["bs"])
-
-
-# re-exported so callers needn't import the low-level tokenizer separately
-__all__ = ["TextSearchIndex", "TOKEN_PATTERN"]

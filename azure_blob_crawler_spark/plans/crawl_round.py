@@ -28,7 +28,7 @@ from azure_blob_crawler_spark import config
 from azure_blob_crawler_spark.functions.embedding import make_embed_udf, truncate_for_embedding
 from azure_blob_crawler_spark.functions.text import token_count
 from azure_blob_crawler_spark.functions.urls import canonical_url, url_hash, url_host
-from azure_blob_crawler_spark.operators.admission import MAX_BYTES
+from azure_blob_crawler_spark.operators.admission import MAX_BYTES, nonempty_content
 from azure_blob_crawler_spark.operators.chunker import make_chunk_doc_udf
 from azure_blob_crawler_spark.operators.extraction import (
     full_content_of,
@@ -270,7 +270,7 @@ class CrawlRunner:
             .withColumn("doc_id", F.regexp_replace("url", "[^A-Za-z0-9_-]", "_"))
             .persist()
         )
-        nonempty = docs.filter(F.trim("full_content") != "")
+        nonempty = docs.filter(nonempty_content(F.col("full_content")))
         chunks = (
             nonempty.select(
                 "doc_id", "url",

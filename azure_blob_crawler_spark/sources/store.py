@@ -489,11 +489,6 @@ class SnapshotStore:
             bucket_by=m.get("bucket_by"),
         )
 
-    def rollback(self, name: str, version: int) -> None:
-        m = self._manifest(name, version)
-        m = dict(m, version=self.current_version(name) + 1, summary={"rollback_to": version})
-        self._commit(name, m)
-
     def expire_snapshots(self, name: str, keep_last: int = 2) -> dict:
         """Iceberg ``expireSnapshots`` parity (and the reference's
         delete-after-processing GC, document_processor.py:344-358): drop all

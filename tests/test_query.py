@@ -3,6 +3,7 @@ clamps / field selection / vector exclusion / wildcard — the reference's
 MCP semantics (SURVEY.md §2.8)."""
 
 import pytest
+from pyspark.sql import functions as F
 
 from azure_blob_crawler_spark import config
 from azure_blob_crawler_spark.functions.embedding import embed_query, make_embed_udf
@@ -31,7 +32,8 @@ def test_bm25_ranking(chunks):
 
 
 def test_bm25_empty_query(chunks):
-    assert Q.text_search(chunks, "???", top=5).count() == 0 or True
+    # "???" tokenizes to three "?" tokens, and no chunk contains "?"
+    assert Q.text_search(chunks, "???", top=5).count() == 0
     assert Q.text_search(chunks, "", top=5).count() == 0
 
 
@@ -40,6 +42,24 @@ def test_vector_search_exact_self_match(chunks):
     out = Q.vector_search(chunks, query_vector=qv, top=3).collect()
     assert out[0]["chunk_id"] == "c1"
     assert out[0]["score"] == pytest.approx(1.0, abs=1e-6)
+
+
+def test_zero_vector_scores_zero(chunks):
+    """A zero vector has no direction: its cosine with anything is 0.0,
+    not a DIVIDE_BY_ZERO under ANSI mode — as the query vector of a
+    vector or hybrid search, and as a stored vector."""
+    zero = [0.0] * config.TEST_EMBEDDING_DIM
+    out = Q.vector_search(chunks, query_vector=zero, top=5).collect()
+    assert [(r["chunk_id"], r["score"]) for r in out] == [
+        (c, 0.0) for c in ("c1", "c2", "c3", "c4", "c5")
+    ]  # all tied, so ids break the ties
+    hyb = Q.hybrid_search(chunks, "spark shuffle", top=5, query_vector=zero).collect()
+    assert hyb[0]["chunk_id"] == "c1"  # the text leg's top, vector leg all tied
+    assert len(hyb) == 5
+    stored_zero = chunks.withColumn("vector", F.array(*[F.lit(0.0)] * len(zero)))
+    qv = embed_query("spark shuffle", config.TEST_EMBEDDING_DIM)
+    out = Q.vector_search(stored_zero, query_vector=qv, top=5).collect()
+    assert [r["score"] for r in out] == [0.0] * 5
 
 
 def test_hybrid_rrf(chunks):
@@ -127,8 +147,6 @@ def test_run_query_odata_filter(chunks):
 def test_embedding_truncation_cap(spark):
     """>max-token text embeds identically to its truncated prefix
     (document_processor.py:190-196 semantics)."""
-    from pyspark.sql import functions as F
-
     from azure_blob_crawler_spark.functions.embedding import truncate_for_embedding
 
     long_text = "word " * 30_000  # ≫ 8000 tokens
@@ -143,16 +161,19 @@ def test_embedding_truncation_cap(spark):
 
 
 def test_text_search_releases_cache(chunks):
-    """Repeated searches must not accumulate cached RDDs (round-1 advice)."""
+    """Repeated searches must not accumulate cached RDDs: each text_search
+    call adds exactly one storage entry, its materialized top-k (released
+    by the context cleaner once the result DataFrame is gone), and never a
+    corpus or token cache."""
     sc = chunks.sparkSession.sparkContext
-    before = len([r for r in sc._jsc.sc().getRDDStorageInfo()])
-    for _ in range(3):
-        Q.text_search(chunks, "spark shuffle", top=3).collect()
-    after = len([r for r in sc._jsc.sc().getRDDStorageInfo()])
-    # the module fixture keeps `chunks` cached; searches may add only the
-    # tiny localCheckpoint blocks (r6: two per call — the matching-rows
-    # postings set and the top-k — both released by the context cleaner
-    # when the result DataFrame goes away), never a growing corpus or
-    # token cache per call: the blocking tokd.unpersist inside bm25_scores
-    # guarantees the per-query token cache is gone before we count
-    assert after - before <= 2 * 3 + 1
+    chunks.count()  # the module fixture's own cache is in place before
+
+    def cached_rdds() -> set[int]:
+        return {r.id() for r in sc._jsc.sc().getRDDStorageInfo()}
+
+    before = cached_rdds()
+    # results held, so the cleaner cannot drop an entry mid-count
+    outs = [Q.text_search(chunks, "spark shuffle", top=3) for _ in range(3)]
+    for out in outs:
+        out.collect()
+    assert len(cached_rdds() - before) == len(outs)

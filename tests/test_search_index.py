@@ -4,6 +4,7 @@ query time (round-3 verdict item 1)."""
 
 import os
 import shutil
+import uuid
 
 import pytest
 from pyspark.sql import functions as F
@@ -248,6 +249,47 @@ def test_vacuum_restores_one_job_serving(spark, store, tmp_path):
     assert got.keys() == w.keys()
     for k in w:
         assert abs(got[k] - w[k]) < 1e-9, k
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs launched by ``fn()``, counted through a private job group
+    — deterministic for a fixed plan and input, unlike timings."""
+    sc = spark.sparkContext
+    group = f"budget-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_serving_job_budgets(spark, store):
+    """Exact Spark job counts of top-k serving on a clean index and of the
+    scan tier. Each shuffle stage is its own job under adaptive execution,
+    so a clean bm25 query (postings scan → per-term df → broadcast join →
+    per-chunk sum) is a fixed handful; text_search adds the top-k
+    materialization and the projection join, hybrid_search the vector leg
+    and the RRF fuse; the scan tier adds its one stats job. A cache or
+    checkpoint step slipped back into the query path shows here."""
+    from azure_blob_crawler_spark import config
+    from azure_blob_crawler_spark.functions.embedding import make_embed_udf
+    from azure_blob_crawler_spark.operators import query as Q
+
+    chunks = _corpus(spark).withColumn(
+        "vector", make_embed_udf(config.TEST_EMBEDDING_DIM)("content")
+    ).persist()
+    chunks.count()
+    idx = TextSearchIndex(store, n_term_buckets=8, n_doc_buckets=8)
+    idx.update(chunks)
+    q = "spark merge shuffle"
+    assert _jobs(spark, lambda: idx.bm25(q).collect()) == 6
+    assert _jobs(spark, lambda: Q.text_search(chunks, q, index=idx).collect()) == 10
+    assert _jobs(spark, lambda: Q.hybrid_search(chunks, q, index=idx).collect()) == 11
+    assert _jobs(spark, lambda: bm25_scores(chunks, q).collect()) == 8
+    assert _jobs(spark, lambda: Q.hybrid_search(chunks, q).collect()) == 12
+    chunks.unpersist()
 
 
 def test_crawl_round_maintains_index(spark, tmp_path):
