@@ -8,9 +8,9 @@ accepted hazard, SURVEY.md §2.12).
                          Jaccard. FULLY Catalyst-native: shingling via
                          transform/sequence, minhash via array_min over
                          xxhash64(seed, shingle). No Python in the plan.
-- simhash_signatures / simhash_pairs
-                       — 64-bit simhash (numpy pandas UDF), Hamming
-                         candidates via 4×16-bit band blocking
+- simhash_signatures_native / simhash_pairs
+                       — 64-bit simhash (md5 token hashes, numpy bit
+                         voting), Hamming candidates via band blocking
 - embedding_near_dups  — cosine near-dup via random-hyperplane LSH buckets
                          + in-bucket verification
 
@@ -351,45 +351,6 @@ def minhash_dedup(
 # --- simhash -------------------------------------------------------------------
 
 
-def make_simhash_udf():
-    """64-bit simhash of token stream (crc-based token hashes, numpy
-    bit-vote accumulation per Arrow batch)."""
-    import re
-    import zlib
-
-    tok = re.compile(TOKEN_PATTERN)
-
-    @F.pandas_udf(LongType())
-    def simhash(texts: pd.Series) -> pd.Series:
-        out = np.zeros(len(texts), dtype=np.int64)
-        for i, t in enumerate(texts.fillna("")):
-            toks = tok.findall(t.lower())
-            if not toks:
-                continue
-            h1 = np.fromiter(
-                (zlib.crc32(w.encode()) for w in toks), dtype=np.uint64, count=len(toks)
-            )
-            h2 = np.fromiter(
-                (zlib.crc32(w.encode()[::-1]) for w in toks), dtype=np.uint64, count=len(toks)
-            )
-            h = (h1 << np.uint64(32)) | h2
-            bits = ((h[:, None] >> np.arange(64, dtype=np.uint64)) & np.uint64(1)).astype(
-                np.int64
-            )
-            votes = (2 * bits - 1).sum(axis=0)
-            sig = np.uint64(0)
-            for b in np.nonzero(votes > 0)[0]:
-                sig |= np.uint64(1) << np.uint64(b)
-            out[i] = sig.astype(np.int64)
-        return pd.Series(out)
-
-    return simhash
-
-
-def simhash_signatures(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
-    return df.select(F.col(id_col).alias("id"), make_simhash_udf()(F.col(text_col)).alias("sim"))
-
-
 def simhash_signatures_native(df: DataFrame, text_col: str, id_col: str) -> DataFrame:
     """Catalyst-native 64-bit simhash with an exact DuckDB twin
     (``simhash_native_sql``), used as the oracle-checkable signature surface.
@@ -402,8 +363,8 @@ def simhash_signatures_native(df: DataFrame, text_col: str, id_col: str) -> Data
     # no fan_out here: the numpy voting below makes the per-row cost small,
     # and splitting a few hundred oracle-tier rows across cores×2 pandas-UDF
     # tasks costs more in per-task Arrow round-trips than it saves (r6
-    # measurement: 3.7 s vs 2.5 s in-bench). Heavy-corpus callers use the
-    # production make_simhash_udf tier and own their partitioning.
+    # measurement: 3.7 s vs 2.5 s in-bench). Heavy-corpus callers own their
+    # partitioning.
     toks = F.regexp_extract_all(F.lower(F.col(text_col)), F.lit(TOKEN_PATTERN), 0)
     md5s = F.transform(toks, lambda t: F.md5(F.encode(t, "UTF-8")))
     base = df.select(
@@ -508,17 +469,6 @@ def simhash_pairs(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
         .filter(F.col("hamming") <= max_hamming)
         .dropDuplicates(["id_a", "id_b"])
     )
-
-
-# --- n-gram jaccard (exact, for verification/tests) ---------------------------
-
-
-def ngram_jaccard(col_a, col_b, k: int = 5):
-    """Exact word-shingle Jaccard between two text columns (native)."""
-    sa, sb = F.array_distinct(shingles(col_a, k)), F.array_distinct(shingles(col_b, k))
-    inter = F.size(F.array_intersect(sa, sb))
-    union = F.size(F.array_union(sa, sb))
-    return F.when(union == 0, 0.0).otherwise(inter / union)
 
 
 # --- embedding near-dup ---------------------------------------------------------

@@ -12,13 +12,8 @@ tuple (shared/processing/file_extractor.py:44-116):
 - other       → one ``kind='media'`` placeholder span with media_ref (:103-106)
 
 This module's wire format for paged documents is plain text with ``\\f``
-page breaks (pdf) / paragraph streams (docx); REAL binary decoding lives in
-``operators/binary_decode.py`` (stdlib-only: full DOCX paragraph extraction
-via zipfile+ElementTree, simple-PDF content-stream text via zlib) and feeds
-the same span builders below, so markers, ordering, blank-page skipping and
-full-content concatenation are single-sourced and pinned by one test set.
-Complex PDF encodings (CMaps, multi-byte fonts) remain PyPDF2 territory —
-declared out of scope for this container.
+page breaks (pdf) / paragraph streams (docx). Binary bodies are out of
+scope: the fetch ``content`` column is text, so no fetch yields raw bytes.
 
 All heavy lifting is one Arrow-vectorized pandas UDF; span→pages/full_content
 reassembly is Catalyst-native (array_sort/transform/array_join).

@@ -14,9 +14,10 @@ pending → in_flight → done | done_skipped | pending(attempts+1) | dead.
 
 Every merge is idempotent on its key, and the claim is a pure function of
 committed frontier state — so a crash anywhere mid-round replays to the
-identical result (tests/test_resume.py). The final frontier merge of a round
-carries the round's metrics + touched-bucket lineage in its snapshot summary
-(north rule's per-partition lineage + fetch/dedup/emit metrics).
+identical result (tests/test_ordering.py::test_resume_equals_uninterrupted).
+The final frontier merge of a round carries the round's metrics +
+touched-bucket lineage in its snapshot summary (north rule's per-partition
+lineage + fetch/dedup/emit metrics).
 """
 
 from __future__ import annotations

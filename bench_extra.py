@@ -27,14 +27,6 @@ import bench as benchmod  # noqa: E402
 from azure_blob_crawler_spark.session import get_spark  # noqa: E402
 
 
-def _steal():
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    vals = [int(x) for x in parts[1:]]
-    steal = vals[7] if len(vals) > 7 else 0
-    return vals[0] + vals[1] + vals[2] + steal, steal
-
-
 def noop(df):
     df.write.format("noop").mode("overwrite").save()
 
@@ -65,7 +57,7 @@ def main():
         fn = qs[name]
         times = []
         for rep in range(args.reps):
-            c0 = _steal()
+            c0 = benchmod._cpu_sample()
             t0 = time.time()
             spark.sparkContext.setJobDescription(f"{name} rep{rep}")
             df = fn(spark, sf_dir)
@@ -74,9 +66,8 @@ def main():
             else:
                 df.count()
             dt = time.time() - t0
-            c1 = _steal()
-            db, ds = c1[0] - c0[0], c1[1] - c0[1]
-            times.append((round(dt, 3), round(100.0 * ds / db, 1) if db else 0.0))
+            c1 = benchmod._cpu_sample()
+            times.append((round(dt, 3), benchmod._steal_pct(c0, c1)))
         spark.sparkContext.setJobDescription(None)
         out[name] = times
         print(name, times, flush=True)

@@ -46,22 +46,10 @@ def test_minhash_lsh_pairs_and_dedup(spark):
 
 
 def test_simhash_hamming(spark):
-    sigs = DD.simhash_signatures(docs_df(spark), "text", "doc_id")
+    sigs = DD.simhash_signatures_native(docs_df(spark), "text", "doc_id")
     pairs = {(r["id_a"], r["id_b"]): r["hamming"] for r in DD.simhash_pairs(sigs, max_hamming=10).collect()}
     assert pairs.get((1, 2)) == 0
     assert (1, 4) not in pairs
-
-
-def test_ngram_jaccard(spark):
-    df = docs_df(spark)
-    a = df.filter("doc_id = 1").select(F.col("text").alias("ta"))
-    b = df.filter("doc_id = 3").select(F.col("text").alias("tb"))
-    j = a.crossJoin(b).select(DD.ngram_jaccard(F.col("ta"), F.col("tb"), 3).alias("j")).collect()[0]["j"]
-    assert 0.3 < j < 1.0
-    j_self = a.crossJoin(a.select(F.col("ta").alias("tb"))).select(
-        DD.ngram_jaccard(F.col("ta"), F.col("tb"), 3).alias("j")
-    ).collect()[0]["j"]
-    assert j_self == 1.0
 
 
 def test_embedding_near_dups_recovers_planted(spark):

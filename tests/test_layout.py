@@ -1,0 +1,68 @@
+"""Package layout: every module is reached from a crawl, query or benchmark
+entry point, so no module exists only for its own tests. Spark-free: the
+imports are read with ``ast``; nothing is imported."""
+
+import ast
+from pathlib import Path
+
+ROOT = Path(__file__).resolve().parent.parent
+PKG = "azure_blob_crawler_spark"
+ENTRY_POINTS = ["__spark_entry__.py", "bench.py", "bench_extra.py", "tools/*.py", "perfbench/*.py"]
+# Known unreached modules, each due for deletion (ROADMAP item 5). The set
+# must shrink, never grow: the test fails on any other unreached module and
+# on an entry here that is reached or gone.
+PENDING_DELETION = {
+    "azure_blob_crawler_spark.operators.jpeg",
+    "azure_blob_crawler_spark.operators.multimodal",
+}
+
+
+def _package_modules() -> dict[str, Path]:
+    """Dotted module name -> file; a package's ``__init__`` is the package."""
+    mods = {}
+    for path in (ROOT / PKG).rglob("*.py"):
+        parts = path.relative_to(ROOT).with_suffix("").parts
+        if parts[-1] == "__init__":
+            parts = parts[:-1]
+        mods[".".join(parts)] = path
+    return mods
+
+
+def _imports(path: Path) -> set[str]:
+    """Dotted names a file imports anywhere in its body (the package uses
+    absolute imports only). ``from X import Y`` yields X and X.Y, since Y
+    may be a submodule."""
+    names = set()
+    for node in ast.walk(ast.parse(path.read_text(), str(path))):
+        if isinstance(node, ast.Import):
+            names.update(a.name for a in node.names)
+        elif isinstance(node, ast.ImportFrom) and node.module:
+            names.add(node.module)
+            names.update(f"{node.module}.{a.name}" for a in node.names)
+    return names
+
+
+def _reached(mods: dict[str, Path]) -> set[str]:
+    """Transitive closure of package modules imported from the entry points.
+    Importing a.b.c also runs the ``__init__`` of a and a.b."""
+    seen: set[str] = set()
+    todo = [p for pattern in ENTRY_POINTS for p in ROOT.glob(pattern)]
+    while todo:
+        for name in _imports(todo.pop()):
+            parts = name.split(".")
+            for i in range(1, len(parts) + 1):
+                m = ".".join(parts[:i])
+                if m in mods and m not in seen:
+                    seen.add(m)
+                    todo.append(mods[m])
+    return seen
+
+
+def test_every_module_is_reached_from_an_entry_point():
+    mods = _package_modules()
+    reached = _reached(mods)
+    unreached = {m for m, p in mods.items() if p.name != "__init__.py" and m not in reached}
+    new = sorted(unreached - PENDING_DELETION)
+    assert not new, f"modules no entry point imports: {new}"
+    stale = sorted(PENDING_DELETION - unreached)
+    assert not stale, f"reached or gone, drop from PENDING_DELETION: {stale}"

@@ -12,8 +12,14 @@ Prints one JSON line; paste the table into BASELINE.md.
 from __future__ import annotations
 
 import json
+import os
 import subprocess
 import sys
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+import bench as benchmod  # noqa: E402
 
 RUNNER = r"""
 import json, sys, time
@@ -67,27 +73,15 @@ print(json.dumps({"cores": cores, "n": n, "sec": round(best, 2),
 """
 
 
-def _cpu_sample() -> tuple[int, int]:
-    """(busy_jiffies, steal_jiffies) from /proc/stat — sampled around each
-    run so co-tenant interference is attributable per measurement."""
-    with open("/proc/stat") as f:
-        parts = f.readline().split()
-    vals = [int(x) for x in parts[1:]]
-    steal = vals[7] if len(vals) > 7 else 0
-    busy = vals[0] + vals[1] + vals[2] + steal  # user+nice+system+steal
-    return busy, steal
-
-
 def run(cores: int, n: int) -> dict:
-    b0, s0 = _cpu_sample()
+    c0 = benchmod._cpu_sample()
     out = subprocess.run(
         [sys.executable, "-c", RUNNER, str(cores), str(n)],
-        capture_output=True, text=True, check=True, cwd="/root/repo",
+        capture_output=True, text=True, check=True, cwd=ROOT,
     )
-    b1, s1 = _cpu_sample()
+    c1 = benchmod._cpu_sample()
     res = json.loads(out.stdout.strip().splitlines()[-1])
-    db, ds = b1 - b0, s1 - s0
-    res["steal_pct_of_nonidle"] = round(100.0 * ds / db, 1) if db > 0 else 0.0
+    res["steal_pct_of_nonidle"] = benchmod._steal_pct(c0, c1)
     return res
 
 
@@ -112,8 +106,6 @@ def run_clean(cores: int, n: int, max_steal: float, max_tries: int) -> dict:
 
 
 def main():
-    import os
-
     n = int(sys.argv[1]) if len(sys.argv) > 1 else 8_000_000
     pairs = sys.argv[2] if len(sys.argv) > 2 else "2,8,32"
     cores = [int(c) for c in pairs.split(",")]
