@@ -184,21 +184,6 @@ def chunk_pages(
 # --- Spark UDF surface ---------------------------------------------------
 
 
-def make_chunk_text_udf(
-    max_tokens: int = config.CHUNK_MAX_TOKENS,
-    overlap_tokens: int = config.OVERLAP_TOKENS,
-    tokenizer: str = "lexer",
-):
-    @F.pandas_udf(ArrayType(StringType()))
-    def chunk_text_udf(texts: pd.Series) -> pd.Series:
-        counter = make_counter(tokenizer)  # resolved executor-side
-        return texts.fillna("").map(
-            lambda t: chunk_text(t, max_tokens, overlap_tokens, counter)
-        )
-
-    return chunk_text_udf
-
-
 def make_chunk_doc_udf(
     max_tokens: int = config.CHUNK_MAX_TOKENS,
     overlap_tokens: int = config.OVERLAP_TOKENS,

@@ -1,5 +1,5 @@
 """Work-item ingestion: the reference's Service-Bus message wire formats →
-typed (container, blob) rows, plus binary→text lossy decoding.
+typed (container, blob) rows.
 
 The reference accepts three JSON shapes on its queue
 (shared/services/servicebus_processor.py:181-203):
@@ -22,7 +22,6 @@ correctness oracle (q_workitem_parse).
 
 from __future__ import annotations
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -107,21 +106,3 @@ def workitem_parse_sql(body_expr: str, dialect: str = "duckdb") -> dict[str, str
             f"when {s_ok} then {s_blob} end"
         ),
     }
-
-
-def make_decode_utf8_udf(errors: str = "ignore"):
-    """binary → str with the reference's lossy UTF-8 decode
-    (file_extractor.py:85,94: ``content.decode('utf-8', errors='ignore')``).
-
-    Arrow-batched; the Java-side ``decode(col, 'UTF-8')`` REPLACES malformed
-    bytes with U+FFFD, which is not the reference behavior — hence the
-    pandas UDF. Feed it ``spark.read.format('binaryFile')`` content."""
-    from pyspark.sql.types import StringType
-
-    @F.pandas_udf(StringType())
-    def decode_utf8(blobs: pd.Series) -> pd.Series:
-        return pd.Series(
-            [b.decode("utf-8", errors=errors) if b is not None else None for b in blobs]
-        )
-
-    return decode_utf8

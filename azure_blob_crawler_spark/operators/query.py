@@ -11,7 +11,11 @@ is the 10^10-scale approximate variant.
 
 All scoring is Catalyst-native: tokenization by split/explode, BM25 as a
 grouped aggregation over a posting-list DataFrame, cosine via higher-order
-functions against a broadcast query vector, RRF as two rank windows.
+functions against a literal query vector. A top-k of at most ``MAX_TOP``
+rows is small enough to finish on the driver: the (id, score) rows are
+collected, and the result rows are the chunks whose id is in that set,
+scored by a literal map — no join, broadcast or checkpoint. Hybrid search
+collects both pooled legs the same way and fuses them by RRF in Python.
 """
 
 from __future__ import annotations
@@ -55,9 +59,11 @@ def _postings(toks: DataFrame, id_col: str, terms: list[str] | None = None) -> D
 def _bm25(postings: DataFrame, n_docs: int, avg_len: float, id_col: str) -> DataFrame:
     """(id, score) = Σ over a doc's postings of idf · tf-norm — the one BM25
     formula, fed by on-the-fly postings (scan tier) or stored ones (index
-    tier). Per-term document frequencies are a tree-aggregated groupBy
-    broadcast back onto the postings."""
-    df_by_term = postings.groupBy("term").agg(F.countDistinct(id_col).alias("df"))
+    tier). A term's document frequency is the number of distinct ids in its
+    window, read as the highest dense rank of the id there: one shuffle by
+    term, and a duplicated id (a scan-tier corpus may hold one with two
+    texts) counts once."""
+    by_term = Window.partitionBy("term")
     idf = F.log(
         (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5) + 1.0
     )
@@ -66,10 +72,10 @@ def _bm25(postings: DataFrame, n_docs: int, avg_len: float, id_col: str) -> Data
         + BM25_K1 * (1 - BM25_B + BM25_B * F.col("doc_len") / F.lit(float(avg_len)))
     )
     return (
-        postings.join(F.broadcast(df_by_term), "term")
-        .withColumn("term_score", idf * tf_norm)
+        postings.withColumn("__rank", F.dense_rank().over(by_term.orderBy(id_col)))
+        .withColumn("df", F.max("__rank").over(by_term))
         .groupBy(id_col)
-        .agg(F.sum("term_score").alias("score"))
+        .agg(F.sum(idf * tf_norm).alias("score"))
     )
 
 
@@ -95,35 +101,57 @@ def bm25_scores(
     return _bm25(_postings(toks, id_col, q_terms), int(stats["n"]), stats["a"] or 1.0, id_col)
 
 
+def _project_top(chunks: DataFrame, top: list[tuple], id_col: str) -> DataFrame:
+    """The ``chunks`` rows of a collected top-k ``[(id, score), ...]``, id
+    first and ``score`` last, ordered by score desc, id asc. The corpus scan
+    filters on the ids and takes each score from a literal map (the offset
+    move of ``assign_global_seq``), so it stays parallel; only the ≤
+    ``MAX_TOP`` matches go through one shuffle to the partition that sorts
+    them. A chunk outside ``chunks`` (a caller's filter, an index entry for
+    a chunk the caller dropped) is simply not found."""
+    cols = [id_col, *[c for c in chunks.columns if c != id_col]]
+    if not top:
+        return chunks.select(*cols).filter(F.lit(False)).withColumn("score", F.lit(0.0))
+    score_of = F.create_map(*[F.lit(x) for row in top for x in row])
+    return (
+        chunks.select(*cols)
+        .filter(F.col(id_col).isin([i for i, _ in top]))
+        .withColumn("score", score_of[F.col(id_col)])
+        .repartition(1)
+        .sortWithinPartitions(F.desc("score"), F.asc(id_col))
+    )
+
+
+def _index_scores(index, query: str, id_col: str) -> DataFrame:
+    scored = index.bm25(query)
+    return scored if id_col == "chunk_id" else scored.withColumnRenamed("chunk_id", id_col)
+
+
 def text_search(
     chunks: DataFrame,
     query: str,
-    top: int | None = config.DEFAULT_TOP,
+    top: int = config.DEFAULT_TOP,
     content_col: str = "content",
     id_col: str = "chunk_id",
     index=None,
 ) -> DataFrame:
     """BM25 top-k over the chunk corpus with full chunk columns + ``score``.
 
-    ``top=None`` skips the limit (full ranking — hybrid's unbounded pool).
     ``index`` (a TextSearchIndex) serves the scores from the persistent
     postings+stats tables instead of tokenizing the corpus — the 100-TB
-    serving path; ``chunks`` is then only the projection source for the
-    result join. The small (id, score) set is materialized before the
-    projection join, which broadcasts it."""
+    serving path; ``chunks`` is then only the projection source. The
+    ≤ ``MAX_TOP`` (id, score) rows are collected to the driver and the
+    result is their projection from ``chunks`` (``_project_top``)."""
     if index is not None:
-        scored = index.bm25(query)
-        if id_col != "chunk_id":
-            scored = scored.withColumnRenamed("chunk_id", id_col)
+        scored = _index_scores(index, query, id_col)
     else:
         scored = bm25_scores(chunks, query, content_col, id_col)
-    if top is not None:
-        scored = scored.orderBy(F.desc("score"), F.asc(id_col)).limit(
-            min(top, config.MAX_TOP)
-        )
-    top_k = scored.localCheckpoint(eager=True)
-    out = chunks.join(F.broadcast(top_k), id_col, "inner")
-    return out.orderBy(F.desc("score"), F.asc(id_col))
+    top_rows = (
+        scored.orderBy(F.desc("score"), F.asc(id_col))
+        .limit(min(top, config.MAX_TOP))
+        .collect()
+    )
+    return _project_top(chunks, [(r[id_col], r["score"]) for r in top_rows], id_col)
 
 
 def _py_tokens(text: str) -> list[str]:
@@ -134,22 +162,20 @@ def vector_search(
     chunks: DataFrame,
     query_vector: list[float] | None = None,
     query_text: str | None = None,
-    top: int | None = config.DEFAULT_TOP,
+    top: int = config.DEFAULT_TOP,
     vector_col: str = "vector",
     id_col: str = "chunk_id",
     embed_dim: int = config.TEST_EMBEDDING_DIM,
 ) -> DataFrame:
-    """Exact cosine top-k against a broadcast query vector
+    """Exact cosine top-k against a literal query vector
     (search_client.py:249-259 semantics; embedding of the query mirrors
-    mcp app.py:85-94). ``top=None`` returns the full score set."""
+    mcp app.py:85-94)."""
     if query_vector is None:
         if query_text is None:
             raise ValueError("vector search requires query_vector or query_text")
         query_vector = embed_query(query_text, embed_dim)
     qv = F.array(*[F.lit(float(x)) for x in query_vector])
     scored = chunks.withColumn("score", cosine(F.col(vector_col), qv))
-    if top is None:
-        return scored
     return scored.orderBy(F.desc("score"), F.asc(id_col)).limit(min(top, config.MAX_TOP))
 
 
@@ -176,51 +202,101 @@ def hybrid_search(
     across engines/arithmetic orders — the determinism knob the DuckDB
     oracle relies on (ties then break on id in both engines). ``index``
     routes the text leg through the persistent TextSearchIndex (no corpus
-    tokenization in the plan)."""
-    # Legs are bare (id, score) sets: only the fused top joins back onto the
-    # chunk rows. The index tier's text leg gets text_search(index=)'s
-    # membership in ``chunks`` as a semi-join after the same pool limit.
+    tokenization in the plan); a text-leg chunk missing from ``chunks`` is
+    dropped before ranking, as text_search's projection drops it.
+
+    Pooled legs (the default) hold ≤ ``MAX_TOP`` rows each, so both are
+    collected and fused on the driver (``_pooled_ranks``). ``pool=None``
+    legs are unbounded, so they are ranked and fused in Spark
+    (``_unbounded_fused_top``); only the bench's series entry uses it.
+    Either way the fused top is projected by ``_project_top``."""
     cap = min(pool, config.MAX_TOP) if pool is not None else None
-
-    def pooled(scores: DataFrame) -> DataFrame:
-        if cap is None:
-            return scores
-        return scores.orderBy(F.desc("score"), F.asc(id_col)).limit(cap)
-
     if index is not None:
-        tscore = index.bm25(query_text)
-        if id_col != "chunk_id":
-            tscore = tscore.withColumnRenamed("chunk_id", id_col)
-        tscore = pooled(tscore).join(chunks.select(id_col), id_col, "left_semi")
+        tscore = _index_scores(index, query_text, id_col)
     else:
-        tscore = pooled(bm25_scores(chunks, query_text, content_col, id_col))
-
+        tscore = bm25_scores(chunks, query_text, content_col, id_col)
     if query_vector is None:
         query_vector = embed_query(query_text, embed_dim)
     qv = F.array(*[F.lit(float(x)) for x in query_vector])
-    vscore = pooled(chunks.select(id_col, cosine(F.col(vector_col), qv).alias("score")))
+    cos = cosine(F.col(vector_col), qv)
 
-    rank_key = (
-        F.round(F.col("score"), rank_rounding) if rank_rounding is not None
-        else F.col("score")
+    def rank_key(c):
+        return F.round(c, rank_rounding) if rank_rounding is not None else c
+
+    n = min(top, config.MAX_TOP)
+    if cap is None:
+        if index is not None:
+            tscore = tscore.join(chunks.select(id_col), id_col, "left_semi")
+        vscore = chunks.select(id_col, cos.alias("score"))
+        top_rows = _unbounded_fused_top(tscore, vscore, rank_key, rrf_k, n, id_col)
+    else:
+        rank_text, rank_vec = _pooled_ranks(chunks, tscore, cos, cap, rank_key, id_col)
+        fused = {
+            i: (1.0 / (rrf_k + rank_text[i]) if i in rank_text else 0.0)
+            + (1.0 / (rrf_k + rank_vec[i]) if i in rank_vec else 0.0)
+            for i in rank_text.keys() | rank_vec.keys()
+        }
+        top_rows = sorted(fused.items(), key=lambda kv: (-kv[1], kv[0]))[:n]
+    return _project_top(chunks, top_rows, id_col)
+
+
+def _desc(v) -> tuple:
+    """Python sort key of Spark's ``desc`` (nulls last) for a double."""
+    return (v is None, -v if v is not None else 0.0)
+
+
+def _pooled_ranks(
+    chunks: DataFrame, tscore: DataFrame, cos, cap: int, rank_key, id_col: str
+) -> tuple[dict, dict]:
+    """{id: rank} of each pooled leg, from two collects of ≤ 2·cap rows.
+
+    The text pool is the top ``cap`` scores. One scan of ``chunks`` then
+    yields both the vector leg and the pool's membership in ``chunks``:
+    ordered by (member desc, cosine desc, id asc), its first
+    ``cap + |pool|`` rows hold every member and the top ``cap``
+    non-members, so they hold the true top-``cap`` cosines. Each leg's
+    pool is cut on the raw score and ranked on ``rank_key`` (computed in
+    the plan: Spark's HALF_UP ``round`` is not Python's)."""
+    pool = (
+        tscore.orderBy(F.desc("score"), F.asc(id_col))
+        .limit(cap)
+        .select(id_col, rank_key(F.col("score")).alias("key"))
+        .collect()
     )
-    order = [rank_key.desc(), F.asc(id_col)]
+    vec = (
+        chunks.select(
+            id_col, F.col(id_col).isin([r[0] for r in pool]).alias("member"),
+            cos.alias("score"),
+        )
+        .orderBy(F.desc("member"), F.desc("score"), F.asc(id_col))
+        .limit(cap + len(pool))
+        .select(id_col, "member", "score", rank_key(F.col("score")).alias("key"))
+        .collect()
+    )
+    members = {r[0] for r in vec if r["member"]}
+    vec_top = sorted(vec, key=lambda r: (_desc(r["score"]), r[0]))[:cap]
+
+    def ranks(rows) -> dict:
+        ordered = sorted(rows, key=lambda r: (_desc(r["key"]), r[0]))
+        return {r[0]: rank for rank, r in enumerate(ordered, 1)}
+
+    return ranks([r for r in pool if r[0] in members]), ranks(vec_top)
+
+
+def _unbounded_fused_top(
+    tscore: DataFrame, vscore: DataFrame, rank_key, rrf_k: int, n: int, id_col: str
+) -> list[tuple]:
+    """The top ``n`` [(id, RRF score)] of two unbounded (id, score) legs,
+    ranked and fused in Spark. Each leg is materialized once: a count then
+    lets ``assign_global_seq`` pick the single window for a small leg
+    (score sets are ∝ matching docs, not corpus) or two phases over the
+    materialized input for a big one; ranks are identical either way."""
+    order = [rank_key(F.col("score")).desc(), F.asc(id_col)]
 
     def ranked(leg: DataFrame, rank_col: str) -> DataFrame:
-        # A pooled leg is bounded by its limit, so assign_global_seq ranks
-        # it in one single-task window straight off the lineage. A
-        # full-corpus leg (pool=None, oracle determinism) is materialized
-        # once: a cheap count then picks the single window for a small leg
-        # (score sets are ∝ matching docs, not corpus) and a big leg
-        # two-phases over the materialized input. Ranks are identical
-        # either way (assign_global_seq contract).
-        leg = leg.select(id_col, "score")
-        if cap is None:
-            leg = leg.localCheckpoint(eager=True)
+        leg = leg.select(id_col, "score").localCheckpoint(eager=True)
         return assign_global_seq(
-            leg, order, rank_col,
-            bounded_rows=cap if cap is not None else leg.count(),
-            input_materialized=cap is None,
+            leg, order, rank_col, bounded_rows=leg.count(), input_materialized=True
         ).select(id_col, rank_col)
 
     fused = (
@@ -232,14 +308,8 @@ def hybrid_search(
             + F.coalesce(1.0 / (F.lit(rrf_k) + F.col("rank_vec")), F.lit(0.0)),
         )
     )
-    fused_top = (
-        fused.select(id_col, "score")
-        .orderBy(F.desc("score"), F.asc(id_col))
-        .limit(min(top, config.MAX_TOP))
-        .localCheckpoint(eager=True)
-    )
-    out = chunks.join(F.broadcast(fused_top), id_col, "inner")
-    return out.orderBy(F.desc("score"), F.asc(id_col))
+    rows = fused.orderBy(F.desc("score"), F.asc(id_col)).limit(n).select(id_col, "score")
+    return [(r[0], r[1]) for r in rows.collect()]
 
 
 _ODATA_OPS = {"eq": "=", "ne": "<>", "gt": ">", "ge": ">=", "lt": "<", "le": "<="}

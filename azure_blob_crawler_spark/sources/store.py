@@ -18,7 +18,10 @@ touching operator code:
   the delta spread across all buckets; measured ~100× bytes-written drop in
   BASELINE.md). Buckets whose list exceeds ``compact_files`` are compacted
   in the same commit, bounding read amplification;
-- a snapshot = JSON manifest {version → bucket → [data paths], summary};
+- a snapshot = JSON manifest {version → bucket → [data paths], schema,
+  summary}; the schema is fixed at create time and every write conforms to
+  it, so a read passes it to the parquet reader instead of launching a
+  footer-inference job;
   commits are atomic via write-temp + ``os.replace`` of the CURRENT pointer
   (single-writer: the Spark driver, exactly like an Iceberg catalog commit);
 - readers always see the last committed snapshot; a crash mid-write leaves
@@ -40,6 +43,7 @@ import uuid
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
 
 _VDIR_RE = re.compile(r"data/v(\d{6})")
 
@@ -52,6 +56,31 @@ DEFAULT_COMPACT_FILES = 4
 # than append+reconcile bookkeeping (small tables = test/bootstrap scale);
 # above it, bytes written must be ∝ delta, so merge-on-read takes over
 MOR_MIN_TABLE_BYTES = 64 * 1024 * 1024
+
+
+def _as_nullable(dt: DataType) -> DataType:
+    """``dt`` with every field, element and value nullable — the schema a
+    parquet read yields, so writes can be cast to it without a
+    nullability-narrowing cast."""
+    if isinstance(dt, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in dt]
+        )
+    if isinstance(dt, ArrayType):
+        return ArrayType(_as_nullable(dt.elementType), True)
+    if isinstance(dt, MapType):
+        return MapType(_as_nullable(dt.keyType), _as_nullable(dt.valueType), True)
+    return dt
+
+
+def _schema(manifest: dict) -> StructType:
+    return StructType.fromJson(manifest["schema"])
+
+
+def _conform(df: DataFrame, schema: StructType) -> DataFrame:
+    """``df``'s columns in table order, cast to the table schema (a no-op
+    projection when the types already match), plus ``__bucket``."""
+    return df.select(*[F.col(f.name).cast(f.dataType) for f in schema], "__bucket")
 
 
 class SnapshotStore:
@@ -151,8 +180,10 @@ class SnapshotStore:
     def _read_reconciled(self, name: str, manifest: dict, buckets=None) -> DataFrame | None:
         """Read the given buckets (default: all), resolving multi-file
         buckets newest-generation-wins per key. Single-file buckets are read
-        verbatim — no shuffle for the clean part of the table."""
+        verbatim — no shuffle for the clean part of the table. The reader
+        takes the manifest's schema, so building the plan runs no job."""
         key_cols = manifest["key"]
+        reader = self.spark.read.schema(_schema(manifest))
         sel = manifest["buckets"]
         if buckets is not None:
             wanted = {str(b) for b in buckets}
@@ -166,7 +197,7 @@ class SnapshotStore:
         dirty_lists = [ps for ps in sel.values() if len(ps) > 1]
         parts: list[DataFrame] = []
         if clean_paths:
-            parts.append(self.spark.read.parquet(*clean_paths))
+            parts.append(reader.parquet(*clean_paths))
         if dirty_lists:
             # group dirty constituent paths by generation → one scan per gen
             by_gen: dict[int, set[str]] = {}
@@ -174,7 +205,7 @@ class SnapshotStore:
                 for p in ps:
                     by_gen.setdefault(self._gen_of(p), set()).add(os.path.join(tdir, p))
             gen_dfs = [
-                self.spark.read.parquet(*sorted(paths)).withColumn("__gen", F.lit(g))
+                reader.parquet(*sorted(paths)).withColumn("__gen", F.lit(g))
                 for g, paths in by_gen.items()
             ]
             dirty = gen_dfs[0]
@@ -186,9 +217,7 @@ class SnapshotStore:
                 .filter(F.col("__rn") == 1)
                 .drop("__rn", "__gen")
             )
-            parts.append(
-                resolved.select(*parts[0].columns) if parts else resolved
-            )
+            parts.append(resolved)
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p)
@@ -225,6 +254,7 @@ class SnapshotStore:
                 "n_buckets": n_buckets,
                 "bucket_by": bucket_cols,
                 "buckets": buckets,
+                "schema": _as_nullable(df.schema).jsonValue(),
                 "summary": summary or {},
             },
         )
@@ -305,6 +335,7 @@ class SnapshotStore:
         m = self._manifest(name)
         key_cols, n_buckets = m["key"], m["n_buckets"]
         bucket_cols = self._bucket_cols_of(m)
+        schema = _schema(m)
         use_mor = strategy == "mor" or (
             strategy == "auto" and self.table_bytes(name, m) >= MOR_MIN_TABLE_BYTES
         )
@@ -315,15 +346,6 @@ class SnapshotStore:
             touched = sorted(r["__bucket"] for r in up.select("__bucket").distinct().collect())
             version = self.current_version(name) + 1
             new_buckets = {b: list(ps) for b, ps in m["buckets"].items()}
-            any_path = next(iter(m["buckets"].values()), None)
-            if any_path:
-                base_cols = list(
-                    self.spark.read.parquet(
-                        os.path.join(self._tdir(name), any_path[0])
-                    ).columns
-                )
-            else:
-                base_cols = [c for c in up.columns if c != "__bucket"]
 
             compacted: list[int] = []
             if delete:
@@ -344,9 +366,7 @@ class SnapshotStore:
                     compacted = touched
             elif use_mor:
                 # merge-on-read append: write ONLY the delta
-                rel = self._write_buckets(
-                    name, up.select(*base_cols, "__bucket"), version
-                )
+                rel = self._write_buckets(name, _conform(up, schema), version)
                 base = os.path.join(self._tdir(name), rel)
                 for b, d in self._existing_bucket_dirs(base).items():
                     new_buckets.setdefault(b, [])
@@ -355,8 +375,7 @@ class SnapshotStore:
                 over = [int(b) for b, ps in new_buckets.items() if len(ps) > compact_files]
                 if over:
                     probe = {
-                        "key": key_cols,
-                        "buckets": {str(b): new_buckets[str(b)] for b in over},
+                        **m, "buckets": {str(b): new_buckets[str(b)] for b in over},
                     }
                     squashed = self._read_reconciled(name, probe).withColumn(
                         "__bucket", self._bucket_col(bucket_cols, n_buckets)
@@ -370,7 +389,7 @@ class SnapshotStore:
                 # copy-on-write: reconcile the touched buckets with the
                 # updates (update rows win) and rewrite them as single files
                 current = self._read_reconciled(name, m, buckets=touched)
-                merged = up.select(*base_cols, "__bucket")
+                merged = _conform(up, schema)
                 if current is not None:
                     kept = current.join(up.select(*key_cols), key_cols, "left_anti")
                     merged = merged.unionByName(
@@ -392,14 +411,7 @@ class SnapshotStore:
                 commit_summary["compacted_buckets"] = sorted(compacted)
             self._commit(
                 name,
-                {
-                    "version": version,
-                    "key": key_cols,
-                    "n_buckets": n_buckets,
-                    "bucket_by": bucket_cols,
-                    "buckets": new_buckets,
-                    "summary": commit_summary,
-                },
+                {**m, "version": version, "buckets": new_buckets, "summary": commit_summary},
             )
             return commit_summary
         finally:
@@ -418,7 +430,7 @@ class SnapshotStore:
         bucket_cols, n_buckets = self._bucket_cols_of(m), m["n_buckets"]
         version = self.current_version(name) + 1
         tagged = df.withColumn("__bucket", self._bucket_col(bucket_cols, n_buckets))
-        rel = self._write_buckets(name, tagged, version, suffix="-rewrite")
+        rel = self._write_buckets(name, _conform(tagged, _schema(m)), version, suffix="-rewrite")
         base = os.path.join(self._tdir(name), rel)
         new_buckets = {b: list(ps) for b, ps in m["buckets"].items()}
         for b in buckets:
@@ -430,14 +442,7 @@ class SnapshotStore:
         )
         self._commit(
             name,
-            {
-                "version": version,
-                "key": m["key"],
-                "n_buckets": n_buckets,
-                "bucket_by": bucket_cols,
-                "buckets": new_buckets,
-                "summary": commit_summary,
-            },
+            {**m, "version": version, "buckets": new_buckets, "summary": commit_summary},
         )
         return commit_summary
 
@@ -454,8 +459,7 @@ class SnapshotStore:
         """Explicit full compaction: rewrite every multi-file bucket as one
         reconciled file (Iceberg ``rewrite_data_files`` parity)."""
         m = self._manifest(name)
-        key_cols, n_buckets = m["key"], m["n_buckets"]
-        bucket_cols = self._bucket_cols_of(m)
+        bucket_cols, n_buckets = self._bucket_cols_of(m), m["n_buckets"]
         dirty = [b for b, ps in m["buckets"].items() if len(ps) > 1]
         if not dirty:
             return {"compacted_buckets": []}
@@ -471,14 +475,7 @@ class SnapshotStore:
         commit_summary = dict(summary or {}, compacted_buckets=sorted(int(b) for b in dirty))
         self._commit(
             name,
-            {
-                "version": version,
-                "key": key_cols,
-                "n_buckets": n_buckets,
-                "bucket_by": bucket_cols,
-                "buckets": new_buckets,
-                "summary": commit_summary,
-            },
+            {**m, "version": version, "buckets": new_buckets, "summary": commit_summary},
         )
         return commit_summary
 

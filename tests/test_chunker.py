@@ -8,7 +8,6 @@ from azure_blob_crawler_spark.operators.chunker import (
     chunk_text,
     count_tokens,
     make_chunk_doc_udf,
-    make_chunk_text_udf,
 )
 
 
@@ -98,20 +97,6 @@ def test_chunk_pages_oversized_page():
     assert len(chunks) >= 3
     # residue quirk: the small page is flushed before the big page re-chunks
     assert chunks[0].startswith("--- Page 1 ---")
-
-
-def test_udf_matches_python(spark):
-    texts = [
-        "",
-        "tiny doc.",
-        " ".join(sent(i) for i in range(30)),
-        " ".join(f"w{i}" for i in range(200)),
-    ]
-    df = spark.createDataFrame([(t,) for t in texts], ["text"])
-    udf = make_chunk_text_udf(max_tokens=40, overlap_tokens=8)
-    got = {r["text"]: r["chunks"] for r in df.select("text", udf("text").alias("chunks")).collect()}
-    for t in texts:
-        assert got[t] == chunk_text(t, 40, 8)
 
 
 def test_doc_udf_strategy_dispatch(spark):

@@ -1,12 +1,9 @@
-"""Work-item wire-format parsing (servicebus_processor.py:160-209 parity)
-and binary→text lossy UTF-8 decode (file_extractor.py:85,94)."""
+"""Work-item wire-format parsing (servicebus_processor.py:160-209 parity)."""
 
 import duckdb
 import pandas as pd
-from pyspark.sql import functions as F
 
 from azure_blob_crawler_spark.operators.ingest import (
-    make_decode_utf8_udf,
     parse_work_items,
     workitem_parse_sql,
 )
@@ -61,36 +58,3 @@ def test_parse_work_items_duckdb_parity(spark):
         r.msg_id: (r.f, r.c, r.b) for r in duck.itertuples() if r.f is not None
     }
     assert got == want
-
-
-def test_decode_utf8_lossy(spark):
-    rows = [
-        ("a", "héllo wörld".encode()),
-        ("b", b"ok \xff\xfe broken \xc3"),  # invalid sequences dropped
-        ("c", None),
-        ("d", b""),
-    ]
-    df = spark.createDataFrame(rows, "k string, raw binary")
-    out = {r["k"]: r["t"] for r in df.select("k", make_decode_utf8_udf()(F.col("raw")).alias("t")).collect()}
-    assert out["a"] == "héllo wörld"
-    assert out["b"] == b"ok \xff\xfe broken \xc3".decode("utf-8", errors="ignore")
-    assert out["b"] == "ok  broken "
-    assert out["c"] is None
-    assert out["d"] == ""
-
-
-def test_decode_binary_file_roundtrip(spark, tmp_path):
-    """spark.read.format('binaryFile') → lossy decode → span extraction:
-    the first thing a real binary-blob user does (round-1 missing #2)."""
-    p = tmp_path / "blobs"
-    p.mkdir()
-    (p / "doc1.txt").write_bytes("alpha beta. gamma delta.".encode())
-    (p / "doc2.txt").write_bytes(b"good prefix \xff\xfe then more")
-    df = spark.read.format("binaryFile").load(str(p))
-    decoded = df.select(
-        F.element_at(F.split(F.col("path"), "/"), -1).alias("name"),
-        make_decode_utf8_udf()(F.col("content")).alias("text"),
-    )
-    got = {r["name"]: r["text"] for r in decoded.collect()}
-    assert got["doc1.txt"] == "alpha beta. gamma delta."
-    assert got["doc2.txt"] == "good prefix  then more"

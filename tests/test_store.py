@@ -1,6 +1,8 @@
 """SnapshotStore: MERGE semantics, bucket-incremental commits, atomicity,
 time travel."""
 
+import os
+
 from pyspark.sql import functions as F
 
 from azure_blob_crawler_spark.sources.store import SnapshotStore
@@ -202,3 +204,51 @@ def test_read_buckets_prunes_scan(spark, tmp_path):
         got = sorted((r["k"], r["v"]) for r in one.collect())
         assert got == want and got
     assert st.read_buckets("t", [99]) is None
+
+
+def test_reads_run_no_job_and_schema_rides_every_commit(spark, tmp_path):
+    """The table schema is written once, at create, and carried by every
+    later commit, so a read passes it to the parquet reader: building a
+    read or a bucket read (the table scan of a merge) runs no Spark job,
+    where a schema-inferring read runs one per scanned generation, and a
+    merge no longer probes the table for its columns. The schema is the one
+    the files yield, and a write is cast to it (``v`` stays a long)."""
+    from test_search_index import _jobs
+
+    st = make_store(spark, tmp_path)
+    st.create("t", base_df(spark), key="k", n_buckets=4)
+    want = st._manifest("t")["schema"]
+    assert [f["name"] for f in want["fields"]] == ["k", "v", "s"]
+
+    def upd(lo, hi):
+        return spark.range(lo, hi).select(
+            F.col("id").alias("k"), F.lit(-1).alias("v"), F.lit("x").alias("s")
+        )
+
+    def kept_schema():
+        assert st._manifest("t")["schema"] == want
+
+    # merge budgets: with a schema probe of the table, 8 and 6 jobs
+    assert _jobs(spark, lambda: st.merge("t", upd(90, 110), strategy="cow")) == 6
+    kept_schema()
+    assert _jobs(spark, lambda: st.merge("t", upd(0, 10), strategy="mor")) == 5
+    kept_schema()
+    assert any(len(ps) > 1 for ps in st._manifest("t")["buckets"].values())
+    assert _jobs(spark, lambda: st.read("t")) == 0
+    assert _jobs(spark, lambda: st.read_buckets("t", [0, 1, 2, 3])) == 0
+    st.rewrite_buckets("t", [0], st.read_buckets("t", [0]))
+    kept_schema()
+    st.set_summary("t", {"note": "metadata only"})
+    kept_schema()
+    st.compact("t")
+    kept_schema()
+    st.expire_snapshots("t", keep_last=2)
+    kept_schema()
+
+    m = st._manifest("t")
+    got = st.read("t")
+    assert got.schema == spark.read.parquet(
+        *[os.path.join(st._tdir("t"), ps[0]) for ps in m["buckets"].values()]
+    ).schema
+    assert dict(got.dtypes)["v"] == "bigint"
+    assert got.count() == 110 and got.filter(F.col("v") == -1).count() == 30
