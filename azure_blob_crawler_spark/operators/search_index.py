@@ -264,8 +264,8 @@ class TextSearchIndex:
         pruned postings only, with no driver-side job before it (the
         store reads with the manifest's schema), and scores them with one
         shuffle by term and one by chunk. After a replacing update/delete,
-        one driver-side job collects the candidates' doc buckets and the
-        plan adds a gen-validity join against those doc rows."""
+        a driver-side collect of the candidates' doc buckets runs first and
+        the plan adds a gen-validity join against those doc rows."""
         q_terms = sorted(set(_py_tokens(query)))
         summ = self._summary()
         n_docs, sum_len = int(summ.get("n_docs", 0)), int(summ.get("sum_len", 0))
