@@ -133,6 +133,11 @@ def canonicalize_sql(
     Returns a nested-subquery SELECT when ``from_clause`` is given (oracle
     use), else a single scalar expression built by textual substitution
     (Spark ``F.expr`` use).
+
+    The steps split strings and do not parse URLs, so a URL that
+    ``canonical_url`` maps to NULL (one java.net.URI rejects, such as
+    ``https://a.com/p q``) still gets a string here: invalid URLs are
+    outside the dialect-parity domain.
     """
     steps = _steps(dialect, sort_query=sort_query)
     if from_clause is None:
@@ -205,27 +210,32 @@ def sort_query_params(qry: Column) -> Column:
 def canonical_url(url: Column | str, sort_query: bool = False) -> Column:
     """Canonicalized URL as a native Spark column expression.
 
-    Built on ``parse_url`` (one java.net.URI parse feeding scheme/authority/
-    path/query) plus a linear regexp chain for path normalization — the
-    step-inlined form used for the DuckDB oracle (``canonicalize_sql``)
+    Built on ``try_parse_url`` (one java.net.URI parse feeding scheme/
+    authority/path/query) plus a linear regexp chain for path normalization
+    — the step-inlined form used for the DuckDB oracle (``canonicalize_sql``)
     compiles to pathologically large codegen in Spark; this form is a few
-    hundred bytes of generated code. Observable output is identical; the
-    parity test in tests/test_urls.py pins both against the same cases.
+    hundred bytes of generated code when ``url`` is a column or a lambda
+    variable. The expression refers to ``url`` about 20 times, so an inlined
+    expression passed as ``url`` is copied into every reference. Observable
+    output is identical; the parity test in tests/test_urls.py pins both
+    against the same cases. A URL that java.net.URI rejects
+    (``https://a.com/p q``, ``https://a.com/%zz``) canonicalizes to NULL
+    instead of failing the query.
 
     ``sort_query`` (opt-in crawl hygiene, off by default to preserve the
     engine's historical frontier keys): stable-sorts query params by key so
     ``?b=2&a=1`` and ``?a=1&b=2`` dedup to one frontier entry.
     """
     u = F.trim(F.col(url) if isinstance(url, str) else url)
-    sch = F.lower(F.parse_url(u, F.lit("PROTOCOL")))
-    auth_l = F.lower(F.parse_url(u, F.lit("AUTHORITY")))
+    sch = F.lower(F.try_parse_url(u, F.lit("PROTOCOL")))
+    auth_l = F.lower(F.try_parse_url(u, F.lit("AUTHORITY")))
     auth = (
         F.when(sch == "http", F.regexp_replace(auth_l, ":80$", ""))
         .when(sch == "https", F.regexp_replace(auth_l, ":443$", ""))
         .otherwise(auth_l)
     )
-    path = _normalize_path(F.coalesce(F.parse_url(u, F.lit("PATH")), F.lit("")))
-    qry = F.coalesce(F.parse_url(u, F.lit("QUERY")), F.lit(""))
+    path = _normalize_path(F.coalesce(F.try_parse_url(u, F.lit("PATH")), F.lit("")))
+    qry = F.coalesce(F.try_parse_url(u, F.lit("QUERY")), F.lit(""))
     if sort_query:
         qry = sort_query_params(qry)
     qpart = F.when(qry != "", F.concat(F.lit("?"), qry)).otherwise(F.lit(""))
@@ -243,12 +253,53 @@ def _colname(c: Column | str) -> str:
     return c if isinstance(c, str) else c._jc.toString()  # noqa: SLF001
 
 
-def canonical_url_py(url: str, sort_query: bool = False) -> str:
+# java.net.URI's ASCII character sets per component (RFC 2396 as the JDK
+# implements it); '%' must start a two-hex-digit escape, and any non-ASCII
+# character that is neither a space separator nor a control is allowed
+_URI_UNRESERVED = "ABCDEFGHIJKLMNOPQRSTUVWXYZabcdefghijklmnopqrstuvwxyz0123456789-_.!~*'()"
+_URI_REG_NAME = _URI_UNRESERVED + "$,;:@&=+"
+_URI_PATH = _URI_UNRESERVED + ":@&=+$,;/"
+_URI_URIC = _URI_UNRESERVED + ";/?:@&=+$,[]"
+_URI_IPV6_SERVER = r"^([^@\[\]]*@)?\[[0-9A-Fa-f:.]+\](:[0-9]*)?$"
+
+
+def _uri_chars_ok(part: str, allowed: str) -> bool:
+    import re
+    import unicodedata
+
+    return all(
+        c in allowed if ord(c) < 128 else unicodedata.category(c) not in ("Zs", "Zl", "Zp", "Cc")
+        for c in re.sub("%[0-9A-Fa-f]{2}", "", part)
+    )
+
+
+def _parses_as_uri(u: str) -> bool:
+    """True when ``parse_url`` yields a scheme and an authority for ``u``:
+    java.net.URI accepts it as ``scheme://authority[path][?query][#frag]``."""
+    import re
+
+    rest, _, frag = u.partition("#")
+    if "#" in frag or not _uri_chars_ok(frag, _URI_URIC):
+        return False
+    scheme, sep, rest = rest.partition("://")
+    if not sep or not re.fullmatch("[A-Za-z][A-Za-z0-9+.-]*", scheme):
+        return False
+    rest, _, qry = rest.partition("?")
+    auth, _, path = rest.partition("/")
+    if not auth or not _uri_chars_ok(qry, _URI_URIC) or not _uri_chars_ok(path, _URI_PATH):
+        return False
+    return _uri_chars_ok(auth, _URI_REG_NAME) or bool(re.match(_URI_IPV6_SERVER, auth))
+
+
+def canonical_url_py(url: str, sort_query: bool = False) -> str | None:
     """Pure-Python twin of ``canonical_url`` for the reference-semantics
     simulator (plans/simulator.py). Segment-stack dot resolution equals the
     engine's bounded regex passes for any URL nested ≤ 8 deep (test-pinned
-    on the shared CASES plus a synthetic-frontier sweep)."""
-    u = url.strip()
+    on the shared CASES plus a synthetic-frontier sweep). None where the
+    engine's ``try_parse_url`` yields NULL (``https://a.com/p q``)."""
+    u = url.strip(" ")
+    if not _parses_as_uri(u):
+        return None
     u = u.split("#", 1)[0]
     scheme, _, rest = u.partition("://")
     scheme = scheme.lower()
@@ -332,7 +383,10 @@ def resolve_href(base: Column, href: Column) -> Column:
 
 
 def resolve_href_py(base: str, href: str) -> str | None:
-    """Pure-Python twin of ``resolve_href`` (simulator/test parity)."""
+    """Pure-Python twin of ``resolve_href`` (simulator/test parity). Like
+    the engine's, it does not parse: an href that resolves to a URL
+    java.net.URI rejects (``/p q``) returns that URL, and
+    ``canonical_url_py`` of it returns None."""
     import re
 
     h = href.strip()

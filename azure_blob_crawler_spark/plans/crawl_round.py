@@ -119,10 +119,13 @@ class CrawlRunner:
 
     def init_frontier(self, seeds: DataFrame, robots: DataFrame) -> None:
         """Seed ingest: canonicalize, first-seq-wins dedup, state=pending.
+        A seed that does not parse as a URL canonicalizes to NULL and is
+        dropped; its discovery_seq stays used, as a duplicate's does.
 
         ``seeds``: (url, depth, discovery_seq)."""
         canon = (
             seeds.withColumn("url", canonical_url("url"))
+            .filter(F.col("url").isNotNull())
             .withColumn("host", url_host("url"))
             .withColumn("url_hash", url_hash("url"))
         )
@@ -443,15 +446,16 @@ class CrawlRunner:
             return definitely_new.unionByName(confirmed_new)
         return filter_unseen(candidates, frontier.select("url_hash"))
 
-    def _merge_or_create(self, name: str, df: DataFrame, key: str) -> int:
-        df = df.persist()
-        n = df.count()
+    def _merge_or_create(self, name: str, df: DataFrame, key: str) -> None:
+        """MERGE into an existing table; create it only from a non-empty
+        ``df`` (the count runs on the create path alone)."""
         if self.store.exists(name):
             self.store.merge(name, df)
-        elif n:
+            return
+        df = df.persist()
+        if df.count():
             self.store.create(name, df, key=key, n_buckets=self.n_buckets)
         df.unpersist()
-        return n
 
     def run(self, max_rounds: int = 1000) -> list[dict]:
         self.recover()

@@ -65,7 +65,7 @@ def simulate(
     next_seq = 0
     for raw in seed_urls:
         canon = canonical_url_py(raw)
-        if canon in res.seen:
+        if canon is None or canon in res.seen:
             next_seq += 1  # seq space mirrors the engine: one per seed row
             continue
         res.seen.add(canon)
@@ -107,7 +107,7 @@ def simulate(
             res.states[e.url] = e.state
             for raw_link in links_for_url(e.url, e.depth):
                 canon = canonical_url_py(raw_link)
-                if canon in res.seen:
+                if canon is None or canon in res.seen:
                     continue
                 res.seen.add(canon)
                 frontier.append(

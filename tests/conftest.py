@@ -1,3 +1,5 @@
+import uuid
+
 import pytest
 
 from azure_blob_crawler_spark.session import get_spark
@@ -8,3 +10,23 @@ def spark():
     s = get_spark("tests", cores=4, shuffle_partitions=4)
     yield s
     s.stop()
+
+
+@pytest.fixture
+def count_jobs(spark):
+    """``count_jobs(fn)``: Spark jobs launched by ``fn()``, counted through
+    a private job group — deterministic for a fixed plan and input, unlike
+    timings."""
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        group = f"budget-{uuid.uuid4().hex}"
+        sc.setJobGroup(group, group)
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        return len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count

@@ -23,6 +23,11 @@ CASES = [
     ("mailto:x@y.z", None),
     ("javascript:void(0)", None),
     ("ftp://files.ex.com/f", None),
+    # hrefs that resolve to a URL java.net.URI rejects canonicalize to NULL
+    ("/p q", None),
+    ("/a|b", None),
+    ("/%zz", None),
+    ("http://a b.com/", None),
 ]
 
 
@@ -87,3 +92,28 @@ def test_base_with_embedded_url_in_query(spark):
     got = sorted(r["link_url"] for r in extract_links(docs).collect())
     assert got == ["https://a.com/dir/child.html", "https://a.com/root.html"]
     assert resolve_href_py(base, "child.html") == "https://a.com/dir/child.html"
+
+
+def test_link_plan_compiles(spark, tmp_path):
+    """The link plan and a whole crawl round run as compiled code: with
+    codegen fallback off, a stage whose generated Java outgrows the JVM's
+    64 KB method limit raises instead of silently running interpreted."""
+    from azure_blob_crawler_spark.plans.crawl_round import CrawlRunner
+    from azure_blob_crawler_spark.sources import synthetic
+
+    runner = CrawlRunner(spark, str(tmp_path / "crawl"), round_size=10, n_buckets=8)
+    seeds = spark.createDataFrame(
+        [(e["url"], e["depth"], e["discovery_seq"]) for e in synthetic.seed_frontier_py(40)],
+        "url string, depth int, discovery_seq long",
+    )
+    prior = spark.conf.get("spark.sql.codegen.fallback", None)
+    spark.conf.set("spark.sql.codegen.fallback", "false")
+    try:
+        assert extract_links(_docs(spark)).count() == sum(e is not None for _, e in CASES)
+        runner.init_frontier(seeds, synthetic.robots_df(spark))
+        assert runner.run_round()["claimed"] == 10
+    finally:
+        if prior is None:
+            spark.conf.unset("spark.sql.codegen.fallback")
+        else:
+            spark.conf.set("spark.sql.codegen.fallback", prior)

@@ -214,3 +214,21 @@ def test_resume_equals_uninterrupted(spark, tmp_path, sim_result):
     runner2.run(max_rounds=100)
     assert runner2.claim_log() == sim_result.claim_log
     assert runner2.seen_set() == sim_result.seen
+
+
+def test_unparseable_seed_is_dropped(spark, tmp_path):
+    """A seed URL java.net.URI rejects (a space in its path) canonicalizes
+    to NULL: ``init_frontier`` drops it instead of keying a NULL-url row,
+    its discovery_seq stays used, and the crawl matches the simulator."""
+    urls = [e["url"] for e in synthetic.seed_frontier_py(12)]
+    urls.insert(3, "https://h1.example.com/p q.txt")
+    seeds = spark.createDataFrame(
+        [(u, 0, i) for i, u in enumerate(urls)], "url string, depth int, discovery_seq long"
+    )
+    runner = CrawlRunner(spark, str(tmp_path / "bad-seed"), round_size=ROUND_SIZE, n_buckets=8)
+    runner.init_frontier(seeds, synthetic.robots_df(spark))
+    runner.run(max_rounds=3)
+    robots = {r["host"]: r["crawl_delay_s"] for r in synthetic.robots_rows()}
+    sim = simulate(urls, robots, round_size=ROUND_SIZE, max_rounds=3)
+    assert runner.claim_log() == sim.claim_log
+    assert runner.seen_set() == sim.seen

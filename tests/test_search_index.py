@@ -6,7 +6,6 @@ import math
 import os
 import re
 import shutil
-import uuid
 from collections import Counter
 
 import pytest
@@ -308,21 +307,7 @@ def test_vacuum_restores_one_job_serving(spark, store, tmp_path):
         assert abs(got[k] - w[k]) < 1e-9, k
 
 
-def _jobs(spark, fn) -> int:
-    """Spark jobs launched by ``fn()``, counted through a private job group
-    — deterministic for a fixed plan and input, unlike timings."""
-    sc = spark.sparkContext
-    group = f"budget-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    return len(sc.statusTracker().getJobIdsForGroup(group))
-
-
-def test_serving_job_budgets(spark, store):
+def test_serving_job_budgets(spark, store, count_jobs):
     """Exact Spark job counts of top-k serving on a clean index and of the
     scan tier. Each shuffle stage is its own job under adaptive execution:
     a clean bm25 query is the postings scan, the per-term df window and the
@@ -343,12 +328,31 @@ def test_serving_job_budgets(spark, store):
     idx = TextSearchIndex(store, n_term_buckets=8, n_doc_buckets=8)
     idx.update(chunks)
     q = "spark merge shuffle"
-    assert _jobs(spark, lambda: idx.bm25(q).collect()) == 3
-    assert _jobs(spark, lambda: Q.text_search(chunks, q, index=idx).collect()) == 5
-    assert _jobs(spark, lambda: Q.hybrid_search(chunks, q, index=idx).collect()) == 6
-    assert _jobs(spark, lambda: bm25_scores(chunks, q).collect()) == 6
-    assert _jobs(spark, lambda: Q.hybrid_search(chunks, q).collect()) == 9
+    assert count_jobs(lambda: idx.bm25(q).collect()) == 3
+    assert count_jobs(lambda: Q.text_search(chunks, q, index=idx).collect()) == 5
+    assert count_jobs(lambda: Q.hybrid_search(chunks, q, index=idx).collect()) == 6
+    assert count_jobs(lambda: bm25_scores(chunks, q).collect()) == 6
+    assert count_jobs(lambda: Q.hybrid_search(chunks, q).collect()) == 9
     chunks.unpersist()
+
+
+def test_crawl_round_job_budgets(spark, tmp_path, count_jobs):
+    """Exact Spark job counts of crawl round 1 (creates the claim-log,
+    chunks, text-index and doc-meta tables) and round 2 (MERGEs into every
+    table) on a 25-seed, 10-per-round crawl. A MERGE into an existing table
+    runs no count before it. A count, cache or re-evaluated plan slipped
+    back into the round shows here."""
+    from azure_blob_crawler_spark.plans.crawl_round import CrawlRunner
+    from azure_blob_crawler_spark.sources import synthetic
+
+    runner = CrawlRunner(spark, str(tmp_path / "crawl"), round_size=10, n_buckets=8)
+    seeds = spark.createDataFrame(
+        [(e["url"], e["depth"], e["discovery_seq"]) for e in synthetic.seed_frontier_py(25)],
+        "url string, depth int, discovery_seq long",
+    )
+    runner.init_frontier(seeds, synthetic.robots_df(spark))
+    assert count_jobs(runner.run_round) == 70
+    assert count_jobs(runner.run_round) == 91
 
 
 def test_crawl_round_maintains_index(spark, tmp_path):

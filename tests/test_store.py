@@ -206,15 +206,13 @@ def test_read_buckets_prunes_scan(spark, tmp_path):
     assert st.read_buckets("t", [99]) is None
 
 
-def test_reads_run_no_job_and_schema_rides_every_commit(spark, tmp_path):
+def test_reads_run_no_job_and_schema_rides_every_commit(spark, tmp_path, count_jobs):
     """The table schema is written once, at create, and carried by every
     later commit, so a read passes it to the parquet reader: building a
     read or a bucket read (the table scan of a merge) runs no Spark job,
     where a schema-inferring read runs one per scanned generation, and a
     merge no longer probes the table for its columns. The schema is the one
     the files yield, and a write is cast to it (``v`` stays a long)."""
-    from test_search_index import _jobs
-
     st = make_store(spark, tmp_path)
     st.create("t", base_df(spark), key="k", n_buckets=4)
     want = st._manifest("t")["schema"]
@@ -229,13 +227,13 @@ def test_reads_run_no_job_and_schema_rides_every_commit(spark, tmp_path):
         assert st._manifest("t")["schema"] == want
 
     # merge budgets: with a schema probe of the table, 8 and 6 jobs
-    assert _jobs(spark, lambda: st.merge("t", upd(90, 110), strategy="cow")) == 6
+    assert count_jobs(lambda: st.merge("t", upd(90, 110), strategy="cow")) == 6
     kept_schema()
-    assert _jobs(spark, lambda: st.merge("t", upd(0, 10), strategy="mor")) == 5
+    assert count_jobs(lambda: st.merge("t", upd(0, 10), strategy="mor")) == 5
     kept_schema()
     assert any(len(ps) > 1 for ps in st._manifest("t")["buckets"].values())
-    assert _jobs(spark, lambda: st.read("t")) == 0
-    assert _jobs(spark, lambda: st.read_buckets("t", [0, 1, 2, 3])) == 0
+    assert count_jobs(lambda: st.read("t")) == 0
+    assert count_jobs(lambda: st.read_buckets("t", [0, 1, 2, 3])) == 0
     st.rewrite_buckets("t", [0], st.read_buckets("t", [0]))
     kept_schema()
     st.set_summary("t", {"note": "metadata only"})
