@@ -56,13 +56,12 @@ CLAIM_SALT_TARGET_ROWS = 1_000_000
 # --- seen-set sizing ---
 # Store buckets for seen/frontier tables. 64 fits tests/bench; at scale the
 # bucket count MUST grow with the table (one bucket = one task's working set
-# in the bloom/cuckoo cogroup paths). Use seen_buckets_for(expected_keys) —
+# in the cuckoo cogroup paths). Use seen_buckets_for(expected_keys) —
 # ~2^27 keys/bucket keeps a shard's raw int64 keys ≈ 1 GB and its cuckoo
 # chain ≈ 0.5 GB per task; 10^10 keys → 128 buckets min, 10^11 → 1024.
 # CrawlRunner(n_buckets=...) and every seen.py entry point take the value
 # explicitly; this module constant is only the small-scale default.
 SEEN_BUCKETS = 64
-BLOOM_FPP = 0.01
 _KEYS_PER_BUCKET_TARGET = 1 << 27
 
 

@@ -342,6 +342,8 @@ def url_host_py(canon: str) -> str:
 
 
 _SCHEME_RX = "^[A-Za-z][A-Za-z0-9+.-]*:"
+# HTML's ASCII whitespace: what a browser strips around an href value
+HTML_WHITESPACE = " \t\n\f\r"
 
 
 def resolve_href(base: Column, href: Column) -> Column:
@@ -355,8 +357,9 @@ def resolve_href(base: Column, href: Column) -> Column:
     segments). Returns NULL — caller drops the row — for fragment-only
     hrefs and unsupported schemes (mailto:, javascript:, data:, ...),
     which the previous behavior pushed straight into ``canonical_url``
-    producing junk rows with empty hosts."""
-    h = F.trim(href)
+    producing junk rows with empty hosts. Leading and trailing
+    ``HTML_WHITESPACE`` is trimmed first."""
+    h = F.trim(href, F.lit(HTML_WHITESPACE))
     sch = F.lower(F.split_part(base, F.lit("://"), F.lit(1)))
     # first-'://' split (an embedded absolute URL in the query must not
     # shift the parse — the substring_index(-1) form would split on the LAST)
@@ -389,7 +392,7 @@ def resolve_href_py(base: str, href: str) -> str | None:
     ``canonical_url_py`` of it returns None."""
     import re
 
-    h = href.strip()
+    h = href.strip(HTML_WHITESPACE)
     if not h or h.startswith("#"):
         return None
     if re.match(_SCHEME_RX, h):

@@ -13,18 +13,15 @@ Codec tiers:
   library covers: WAV audio (``wave``: sample rate, channels, duration,
   RMS loudness over a mono downmix), binary PPM/PGM images (header +
   pixel parse), PNG (zlib-inflated IDAT + per-scanline unfilter, types
-  0-4, 8-bit non-interlaced gray/gray+alpha/RGB/RGBA/palette), GIF
-  (LZW decompress of the first frame + palette lookup) and baseline
-  AND progressive JPEG (operators/jpeg.py: Huffman + dequantize + IDCT
-  + chroma upsample + YCbCr→RGB; SOF2 spectral-selection/successive-
-  approximation scans per T.81 Annex G) — each resized
+  0-4, 8-bit non-interlaced gray/gray+alpha/RGB/RGBA/palette) and GIF
+  (LZW decompress of the first frame + palette lookup) — each resized
   true-nearest-neighbor to a thumbnail feature grid. MP4/ISO-BMFF and
   MP3 yield REAL structural metadata (box-tree / frame-header walk:
   duration, dimensions, bitrate — what frame_sample_plan consumes)
   while frame/PCM payload decoding stays stubbed. Formats needing real
-  codec libraries (JPEG arithmetic/12-bit/CMYK, MP3 PCM, video
-  frames…) come back ``ok = false`` with a reason — the
-  DataFrame-native analog of the stub's NotImplementedError.
+  codec libraries (JPEG, MP3 PCM, video frames…) come back with ``ok``
+  carrying the reason (``codec-not-available``) — the DataFrame-native
+  analog of the stub's NotImplementedError.
 - ``decode_media`` — the hard-stub entry: raises NotImplementedError unless
   a codec module is importable (Pillow / ffmpeg are not in this container).
 - ``fake_feature_extractor`` — deterministic hash-of-bytes stand-in
@@ -583,13 +580,10 @@ def decode_media_stdlib(media: DataFrame, thumb: int = 8) -> DataFrame:
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         cols = [f.name for f in DECODED_SCHEMA.fields]
-        from azure_blob_crawler_spark.operators.jpeg import decode_jpeg_py
-
         image_decoders = (
             (lambda d: d[:2] in (b"P5", b"P6"), decode_ppm_py),
             (lambda d: d[:8] == PNG_SIG, decode_png_py),
             (lambda d: d[:6] in (b"GIF87a", b"GIF89a"), decode_gif_py),
-            (lambda d: d[:2] == b"\xff\xd8", decode_jpeg_py),
         )
         for pdf in batches:
             rows = []

@@ -1,18 +1,14 @@
-"""URL-seen set: sharded-bloom fast path + exact anti-join, with a
-bucket-partitioned growable cuckoo filter for O(1)-memory membership state.
+"""URL-seen set: a bucket-partitioned growable cuckoo filter prefilter in
+front of an exact anti-join.
 
 The reference has NO seen-set (at-least-once Service Bus delivery, duplicates
 possible — servicebus_client.py:84-189); the north rule adds one. Design:
 
-1. **Bloom fast path** — per-store-bucket bloom shards built with
-   ``applyInPandas`` (each task builds exactly one shard) and probed with a
-   ``cogroup`` so neither build nor probe ever materializes a monolithic
-   filter on the driver; candidates the bloom says "definitely new" skip the
-   exact check entirely.
-2. **Exact check** — left-anti join against the seen table on ``url_hash``
-   (bucketed storage ⇒ Iceberg storage-partitioned join; here AQE handles
-   it). No false positives/negatives, the bloom only prunes its input.
-3. **Cuckoo chain** (per bucket, 16-bit fingerprints, 4 slots/bucket) —
+1. **Exact check** (``filter_unseen``) — candidates the cuckoo shards call
+   "definitely new" skip it; the maybe-seen suspects are left-anti joined
+   against the seen table on ``url_hash``. No false positives/negatives:
+   the prefilter only prunes the join's input.
+2. **Cuckoo chain** (per bucket, 16-bit fingerprints, 4 slots/bucket) —
    supports deletion and bounded memory; state is a binary blob per store
    bucket, probed/updated via grouped ``applyInPandas`` so each Spark task
    touches exactly one filter shard. A shard is a CHAIN of same-geometry
@@ -43,142 +39,6 @@ def store_bucket(col: str, n_store_buckets: int):
     rebuild can read ONLY that bucket of the authoritative table instead of
     scanning it (plans/crawl_round.py step 6b)."""
     return F.pmod(F.xxhash64(F.col(col)), F.lit(n_store_buckets)).cast("int")
-
-
-# --- bloom filter -----------------------------------------------------------
-
-
-class Bloom:
-    """Plain numpy Bloom filter over int64 keys (split-and-mix rehash)."""
-
-    def __init__(self, n_bits: int, n_hashes: int, bits: np.ndarray | None = None):
-        self.n_bits = n_bits
-        self.n_hashes = n_hashes
-        self.bits = bits if bits is not None else np.zeros((n_bits + 63) // 64, dtype=np.uint64)
-
-    @staticmethod
-    def sized(expected: int, fpp: float = config.BLOOM_FPP) -> "Bloom":
-        expected = max(expected, 1)
-        m = int(-expected * np.log(fpp) / (np.log(2) ** 2)) + 64
-        k = max(1, round(0.693 * m / expected))
-        return Bloom(m, min(k, 8))
-
-    def _positions(self, keys: np.ndarray) -> np.ndarray:
-        x = keys.astype(np.uint64)
-        # splitmix64-style avalanche, one variant per hash index
-        out = np.empty((self.n_hashes, len(x)), dtype=np.uint64)
-        for i in range(self.n_hashes):
-            salt = np.uint64((0x9E3779B97F4A7C15 * (i + 1)) & 0xFFFFFFFFFFFFFFFF)
-            z = x + salt
-            z = (z ^ (z >> np.uint64(30))) * np.uint64(0xBF58476D1CE4E5B9)
-            z = (z ^ (z >> np.uint64(27))) * np.uint64(0x94D049BB133111EB)
-            out[i] = (z ^ (z >> np.uint64(31))) % np.uint64(self.n_bits)
-        return out
-
-    def add(self, keys: np.ndarray) -> None:
-        pos = self._positions(keys)
-        np.bitwise_or.at(self.bits, pos // 64, np.uint64(1) << (pos % np.uint64(64)))
-
-    def might_contain(self, keys: np.ndarray) -> np.ndarray:
-        if len(keys) == 0:
-            return np.zeros(0, dtype=bool)
-        pos = self._positions(keys)
-        hit = (self.bits[pos // 64] >> (pos % np.uint64(64))) & np.uint64(1)
-        return hit.all(axis=0).astype(bool)
-
-
-def build_bloom_shards(
-    seen_hashes: DataFrame,
-    n_store_buckets: int = config.SEEN_BUCKETS,
-    col: str = "url_hash",
-    fpp: float = config.BLOOM_FPP,
-) -> DataFrame:
-    """Per-store-bucket bloom shards: (bucket, n_bits, n_hashes, bits).
-
-    Each ``applyInPandas`` task sizes and fills exactly one shard from its
-    bucket's keys — no driver-side reduction, no monolithic bitmap. The
-    whole bucket's keys materialize as one pandas group per task, so
-    ``n_store_buckets`` must scale with the table: size it with
-    ``config.seen_buckets_for(expected_keys)`` (~2^27 keys ≈ 1 GB of raw
-    int64 per task, shard bitmap ~20 MB at 1% FPP); the 64-bucket default
-    is a small-scale setting, not a 10^10-key one."""
-    keyed = seen_hashes.select(col).withColumn(
-        "__cb", store_bucket(col, n_store_buckets)
-    )
-
-    def build(pdf: pd.DataFrame) -> pd.DataFrame:
-        keys = pdf[col].to_numpy(dtype=np.int64)
-        bloom = Bloom.sized(len(keys), fpp)
-        bloom.add(keys)
-        return pd.DataFrame(
-            {
-                "bucket": [int(pdf["__cb"].iloc[0])],
-                "n_bits": [bloom.n_bits],
-                "n_hashes": [bloom.n_hashes],
-                "bits": [bloom.bits.tobytes()],
-            }
-        )
-
-    return keyed.groupBy("__cb").applyInPandas(
-        build, "bucket int, n_bits long, n_hashes int, bits binary"
-    )
-
-
-def bloom_probe(
-    candidates: DataFrame,
-    shards: DataFrame,
-    n_store_buckets: int = config.SEEN_BUCKETS,
-    hash_col: str = "url_hash",
-) -> DataFrame:
-    """Tag candidates with ``maybe_seen`` against the bloom shards, cogrouped
-    per store bucket (one shard deserialized per task)."""
-    cand = candidates.withColumn(
-        "__cb", store_bucket(hash_col, n_store_buckets)
-    )
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
-    ) + ", maybe_seen boolean"
-
-    def probe(key, cand_pdf, shard_pdf):
-        cand_pdf = cand_pdf.drop(columns=["__cb"])
-        if len(shard_pdf):
-            row = shard_pdf.iloc[0]
-            b = Bloom(
-                int(row["n_bits"]),
-                int(row["n_hashes"]),
-                np.frombuffer(row["bits"], dtype=np.uint64),
-            )
-            cand_pdf["maybe_seen"] = b.might_contain(
-                cand_pdf[hash_col].to_numpy(dtype=np.int64)
-            )
-        else:
-            cand_pdf["maybe_seen"] = False
-        return cand_pdf
-
-    grouped_c = cand.groupBy("__cb")
-    grouped_s = shards.withColumnRenamed("bucket", "__cb").groupBy("__cb")
-    return grouped_c.cogroup(grouped_s).applyInPandas(probe, out_schema)
-
-
-def filter_unseen(
-    candidates: DataFrame,
-    seen: DataFrame | None,
-    hash_col: str = "url_hash",
-    n_store_buckets: int = config.SEEN_BUCKETS,
-) -> DataFrame:
-    """Rows of ``candidates`` whose hash is not in ``seen`` — sharded-bloom
-    pruned exact anti-join. ``candidates`` must be unique on ``hash_col``.
-
-    No driver-monolithic state anywhere: the bloom is built AND probed one
-    shard per task; only maybe-seen suspects reach the exact anti-join."""
-    if seen is None:
-        return candidates
-    shards = build_bloom_shards(seen, n_store_buckets, hash_col)
-    tagged = bloom_probe(candidates, shards, n_store_buckets, hash_col)
-    definitely_new = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    suspects = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    confirmed_new = suspects.join(seen.select(hash_col), hash_col, "left_anti")
-    return definitely_new.unionByName(confirmed_new)
 
 
 # --- cuckoo filter ------------------------------------------------------------
@@ -411,6 +271,28 @@ def cuckoo_probe(
     return grouped_c.cogroup(grouped_f).applyInPandas(probe, out_schema)
 
 
+def filter_unseen(
+    candidates: DataFrame,
+    shards: DataFrame,
+    seen: DataFrame,
+    n_store_buckets: int,
+    hash_col: str = "url_hash",
+) -> DataFrame:
+    """Rows of ``candidates`` whose hash is not in ``seen``.
+    ``candidates`` must be unique on ``hash_col``.
+
+    The cuckoo ``shards`` (built with the same ``n_store_buckets``) tag each
+    candidate one shard per task; only the maybe-seen suspects reach the
+    exact left-anti join against ``seen``. The prefilter has no false
+    negatives as long as shards ⊇ seen, and a false positive only costs the
+    exact check, so the result is exactly ``candidates`` minus ``seen``."""
+    tagged = cuckoo_probe(candidates, shards, n_store_buckets, hash_col)
+    suspects = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
+    definitely_new = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
+    confirmed_new = suspects.join(seen.select(hash_col), hash_col, "left_anti")
+    return definitely_new.unionByName(confirmed_new)
+
+
 def cuckoo_insert(
     new_keys: DataFrame,
     filters: DataFrame | None,
@@ -499,7 +381,7 @@ def rebuild_overgrown_shards(
         .filter(F.col("__cb").isin(over))
     )
 
-    def rebuild(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def rebuild(key, pdf):
         arr = np.unique(pdf[hash_col].to_numpy(dtype=np.int64))
         cf = CuckooChain.sized(max(4, headroom * len(arr)))
         cf.insert_many(arr)

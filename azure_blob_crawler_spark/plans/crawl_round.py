@@ -5,8 +5,9 @@ One round = the engine equivalent of the reference's full message lifecycle
 
   claim (scheduler) → mark in_flight → fetch (deterministic simulator UDF)
   → admission → span extraction → chunking → embedding → MERGE chunks +
-  doc_meta → link extraction → canonicalize → seen-set dedup (bloom + exact
-  anti-join) → MERGE frontier (done states + discovered links) → commit
+  doc_meta → link extraction → canonicalize → seen-set dedup (cuckoo
+  prefilter + exact anti-join) → MERGE frontier (done states + discovered
+  links) → commit
 
 State machine per frontier row (reference complete/abandon/dead-letter
 semantics, servicebus_client.py:191-264 + exceptions.py taxonomy):
@@ -42,7 +43,6 @@ from azure_blob_crawler_spark.operators.scheduler import claim_round, hot_host_w
 from azure_blob_crawler_spark.operators.sequence import assign_global_seq
 from azure_blob_crawler_spark.operators.seen import (
     cuckoo_insert,
-    cuckoo_probe,
     filter_unseen,
     rebuild_overgrown_shards,
 )
@@ -68,20 +68,14 @@ class CrawlRunner:
         default_delay: float = config.DEFAULT_CRAWL_DELAY_S,
         embed_dim: int = config.TEST_EMBEDDING_DIM,
         n_buckets: int = config.SEEN_BUCKETS,
-        lock_rounds: bool = True,
-        log_claims: bool = True,
         expire_every: int = 0,
         maintain_text_index: bool = True,
     ):
-        """``lock_rounds`` writes the pending→in_flight lock commit (reference
-        peek-lock parity, servicebus_client.py:154-171); correctness does not
-        require it — a crash replays the whole round idempotently either way
-        — so bulk/bench runs can skip one MERGE per round. ``log_claims``
-        likewise controls the ordering-oracle claim log. ``expire_every`` > 0
-        runs snapshot GC (expire_snapshots, keep_last=3) on every table each
-        N rounds — the reference's delete-after-processing cleanup
-        (document_processor.py:344-358) as periodic table maintenance;
-        keep_last ≥ 2 so crash-replay still sees the last committed round.
+        """``expire_every`` > 0 runs snapshot GC (expire_snapshots,
+        keep_last=3) on every table each N rounds — the reference's
+        delete-after-processing cleanup (document_processor.py:344-358) as
+        periodic table maintenance; keep_last ≥ 2 so crash-replay still sees
+        the last committed round.
         ``maintain_text_index`` mirrors the reference's per-document search
         upsert (search_client.py:70-121): the round's chunks MERGE also
         MERGEs BM25 postings + doc stats so text/hybrid queries serve from
@@ -93,8 +87,6 @@ class CrawlRunner:
         self.default_delay = default_delay
         self.embed_dim = embed_dim
         self.n_buckets = n_buckets
-        self.lock_rounds = lock_rounds
-        self.log_claims = log_claims
         self.expire_every = expire_every
         self.maintain_text_index = maintain_text_index
         self.search_index = TextSearchIndex(
@@ -224,27 +216,27 @@ class CrawlRunner:
             frontier.unpersist()
             return {"round": rnd, "claimed": 0, "done": True}
 
-        # 1. lock: pending → in_flight (crash before the final commit replays)
-        if self.lock_rounds:
-            self.store.merge(
-                FRONTIER,
-                claimed.select(
-                    "url_hash", "url", "host", "depth", "discovery_seq",
-                    F.lit("in_flight").alias("state"), "attempts",
-                ),
-                summary={"round": rnd, "phase": "claim", "claimed": n_claimed},
-            )
+        # 1. lock: pending → in_flight (reference peek-lock parity,
+        # servicebus_client.py:154-171; a crash before the final commit
+        # replays the round)
+        self.store.merge(
+            FRONTIER,
+            claimed.select(
+                "url_hash", "url", "host", "depth", "discovery_seq",
+                F.lit("in_flight").alias("state"), "attempts",
+            ),
+            summary={"round": rnd, "phase": "claim", "claimed": n_claimed},
+        )
 
         # 2. claim log (ordering oracle surface)
-        if self.log_claims:
-            log_rows = claimed.select(
-                F.lit(rnd).alias("round"),
-                F.col("claim_rank").alias("rank"),
-                "url",
-                (F.lit(int(rnd)).cast("long") * F.lit(100_000_000).cast("long")
-                 + F.col("claim_rank").cast("long")).alias("log_key"),
-            )
-            self._merge_or_create(CLAIM_LOG, log_rows, key="log_key")
+        log_rows = claimed.select(
+            F.lit(rnd).alias("round"),
+            F.col("claim_rank").alias("rank"),
+            "url",
+            (F.lit(int(rnd)).cast("long") * F.lit(100_000_000).cast("long")
+             + F.col("claim_rank").cast("long")).alias("log_key"),
+        )
+        self._merge_or_create(CLAIM_LOG, log_rows, key="log_key")
 
         # 3. fetch + admission (size gate BEFORE extraction UDFs); fetch
         # failures follow the reference's abandon path (attempts+1, state
@@ -335,7 +327,9 @@ class CrawlRunner:
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        fresh = self._filter_unseen(batch_unique, frontier).persist()
+        fresh = filter_unseen(
+            batch_unique, self.store.read(SEEN_CUCKOO), frontier, self.n_buckets
+        ).persist()
         n_new = fresh.count()
         # global numbering without an unbounded single-partition window:
         # small rounds rank in one task (bound proven by the count just
@@ -358,7 +352,7 @@ class CrawlRunner:
         # commits (a cuckoo false positive only costs an exact check; a
         # frontier key missing from the cuckoo would be a correctness bug)
         if n_new:
-            shards = self.store.read(SEEN_CUCKOO) if self.store.exists(SEEN_CUCKOO) else None
+            shards = self.store.read(SEEN_CUCKOO)
             updated = cuckoo_insert(
                 new_rows.select("url_hash"), shards, n_store_buckets=self.n_buckets
             )
@@ -380,7 +374,7 @@ class CrawlRunner:
             updated = rebuild_overgrown_shards(
                 updated, _keys_for, n_store_buckets=self.n_buckets
             )
-            self._merge_or_create(SEEN_CUCKOO, updated, key="bucket")
+            self.store.merge(SEEN_CUCKOO, updated)
 
         # 7. final frontier commit: done states + failure redeliveries +
         # discovered rows + metrics
@@ -429,22 +423,6 @@ class CrawlRunner:
         # redeliveries also return to pending — count them too)
         self._widths_drift += n_new + n_failed
         return {**summary, "done": False}
-
-    def _filter_unseen(self, candidates: DataFrame, frontier: DataFrame) -> DataFrame:
-        """Seen-set dedup: cuckoo-shard probe prefilter (O(1) memory per
-        task, one shard per task via cogroup) routes only *maybe-seen*
-        candidates to the exact anti-join; falls back to the broadcast-bloom
-        prefilter when no cuckoo table exists. Both prefilters are
-        semantics-free: no false negatives, false positives only cost the
-        exact check."""
-        if self.store.exists(SEEN_CUCKOO):
-            shards = self.store.read(SEEN_CUCKOO)
-            tagged = cuckoo_probe(candidates, shards, n_store_buckets=self.n_buckets)
-            suspects = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-            definitely_new = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-            confirmed_new = suspects.join(frontier.select("url_hash"), "url_hash", "left_anti")
-            return definitely_new.unionByName(confirmed_new)
-        return filter_unseen(candidates, frontier.select("url_hash"))
 
     def _merge_or_create(self, name: str, df: DataFrame, key: str) -> None:
         """MERGE into an existing table; create it only from a non-empty

@@ -8,13 +8,10 @@ from pathlib import Path
 ROOT = Path(__file__).resolve().parent.parent
 PKG = "azure_blob_crawler_spark"
 ENTRY_POINTS = ["__spark_entry__.py", "bench.py", "bench_extra.py", "tools/*.py", "perfbench/*.py"]
-# Known unreached modules, each due for deletion (ROADMAP item 5). The set
+# Known unreached modules, each due for deletion (ROADMAP item 10). The set
 # must shrink, never grow: the test fails on any other unreached module and
 # on an entry here that is reached or gone.
-PENDING_DELETION = {
-    "azure_blob_crawler_spark.operators.jpeg",
-    "azure_blob_crawler_spark.operators.multimodal",
-}
+PENDING_DELETION = {"azure_blob_crawler_spark.operators.multimodal"}
 
 
 def _package_modules() -> dict[str, Path]:

@@ -28,6 +28,10 @@ CASES = [
     ("/a|b", None),
     ("/%zz", None),
     ("http://a b.com/", None),
+    # HTML's ASCII whitespace around an href is trimmed on both sides
+    ("\tp.html", "https://ex.com/a/b/p.html"),
+    ("p.html\n", "https://ex.com/a/b/p.html"),
+    ("\r\n/x\f", "https://ex.com/x"),
 ]
 
 

@@ -1,15 +1,13 @@
-"""Seen-set: bloom no-false-negatives, filter_unseen exactness, cuckoo
-chain membership/delete/serialization/growth, distributed probe/insert."""
+"""Seen-set: filter_unseen exactness (cuckoo prefilter + exact anti-join),
+cuckoo chain membership/delete/serialization/growth, distributed
+probe/insert."""
 
 import numpy as np
 from pyspark.sql import functions as F
 
 from azure_blob_crawler_spark.operators.seen import (
-    Bloom,
     CuckooChain,
     CuckooFilter,
-    bloom_probe,
-    build_bloom_shards,
     cuckoo_insert,
     cuckoo_probe,
     filter_unseen,
@@ -17,48 +15,34 @@ from azure_blob_crawler_spark.operators.seen import (
 )
 
 
-def test_bloom_no_false_negatives():
-    b = Bloom.sized(10_000, 0.01)
-    keys = np.arange(10_000, dtype=np.int64) * 7919 - 5_000_000
-    b.add(keys)
-    assert b.might_contain(keys).all()
-
-
-def test_bloom_fpp_bound():
-    b = Bloom.sized(10_000, 0.01)
-    b.add(np.arange(10_000, dtype=np.int64))
-    probe = np.arange(1_000_000, 1_100_000, dtype=np.int64)
-    fpp = b.might_contain(probe).mean()
-    assert fpp < 0.03
-
-
-def test_bloom_shards_distributed(spark):
-    """Sharded build + cogrouped probe: no false negatives, bounded fpp,
-    and no driver-side monolithic bitmap anywhere in the path."""
-    seen = spark.range(0, 5000).select(F.col("id").alias("url_hash"))
-    shards = build_bloom_shards(seen, n_store_buckets=8).persist()
-    assert shards.count() == 8
-    cand = spark.range(4000, 7000).select(F.col("id").alias("url_hash"))
-    tagged = bloom_probe(cand, shards, n_store_buckets=8)
-    rows = {r["url_hash"]: r["maybe_seen"] for r in tagged.collect()}
-    assert all(rows[k] for k in range(4000, 5000))  # no false negatives
-    fp = sum(rows[k] for k in range(5000, 7000)) / 2000
-    assert fp < 0.05
-    shards.unpersist()
+def _hashes(spark, lo, hi):
+    return spark.range(lo, hi).select(F.col("id").alias("url_hash"))
 
 
 def test_filter_unseen_exact(spark):
-    seen = spark.range(0, 1000).select(F.col("id").alias("url_hash"))
+    seen = _hashes(spark, 0, 1000)
+    shards = cuckoo_insert(seen, None, n_store_buckets=8)
     cand = spark.range(500, 1500).select(F.col("id").alias("url_hash"), F.lit("x").alias("p"))
-    fresh = filter_unseen(cand, seen)
+    fresh = filter_unseen(cand, shards, seen, 8)
     got = sorted(r["url_hash"] for r in fresh.collect())
     assert got == list(range(1000, 1500))
 
 
 def test_filter_unseen_empty_seen(spark):
-    cand = spark.range(10).select(F.col("id").alias("url_hash"))
-    empty = spark.range(0).select(F.col("id").alias("url_hash"))
-    assert filter_unseen(cand, empty).count() == 10
+    cand = _hashes(spark, 0, 10)
+    empty = _hashes(spark, 0, 0)
+    shards = cuckoo_insert(empty, None, n_store_buckets=8)
+    assert filter_unseen(cand, shards, empty, 8).count() == 10
+
+
+def test_filter_unseen_exact_check_decides(spark):
+    """Shards holding keys that ``seen`` lacks only route those candidates
+    to the anti-join; absent from ``seen``, they come out as new."""
+    shards = cuckoo_insert(_hashes(spark, 0, 1500), None, n_store_buckets=8)
+    seen = _hashes(spark, 0, 1000)
+    cand = _hashes(spark, 500, 2000)
+    got = sorted(r["url_hash"] for r in filter_unseen(cand, shards, seen, 8).collect())
+    assert got == list(range(1000, 2000))
 
 
 def test_cuckoo_membership_and_delete():

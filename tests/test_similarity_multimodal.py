@@ -521,8 +521,7 @@ def test_decode_media_stdlib_dataframe(spark):
     rows = [
         ("img1", "d1", bytearray(ppm)),
         ("aud1", "d2", bytearray(wav)),
-        # truncated JPEG: routed to the REAL decoder since round 5 → a
-        # per-row decode-error, not codec-not-available
+        # JPEG needs a codec library: codec-not-available, not an error
         ("jpg1", "d3", bytearray(b"\xff\xd8\xff\xe0 jpeg-ish")),
         # torn MP3: routed to the REAL frame-header walk since round 5 → a
         # per-row decode-error; genuinely unknown bytes keep the old reason
@@ -539,7 +538,7 @@ def test_decode_media_stdlib_dataframe(spark):
     assert np.allclose(got["img1"]["thumb"], want_thumb, atol=1e-6)
     assert got["aud1"]["ok"] == "ok" and got["aud1"]["kind"] == "audio"
     assert got["aud1"]["duration_ms"] == 250 and got["aud1"]["sample_rate"] == 8000
-    assert got["jpg1"]["ok"].startswith("decode-error")
+    assert got["jpg1"]["ok"].startswith("codec-not-available")
     assert got["mp3"]["ok"].startswith("decode-error")
     assert got["unk"]["ok"].startswith("codec-not-available")
     assert got["torn"]["ok"].startswith("decode-error")
