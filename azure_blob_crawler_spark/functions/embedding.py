@@ -13,7 +13,6 @@ parallel per partition with zero shuffle.
 
 from __future__ import annotations
 
-import re
 import zlib
 
 import numpy as np
@@ -23,9 +22,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, FloatType
 
 from azure_blob_crawler_spark import config
-from azure_blob_crawler_spark.functions.text import TOKEN_PATTERN
-
-_TOKEN_RE = re.compile(TOKEN_PATTERN)
+from azure_blob_crawler_spark.functions.text import TOKEN_RE
 
 
 def embed_texts(texts: pd.Series, dim: int) -> pd.Series:
@@ -34,7 +31,7 @@ def embed_texts(texts: pd.Series, dim: int) -> pd.Series:
     for text in texts:
         vec = np.zeros(dim, dtype=np.float64)
         if text:
-            toks = _TOKEN_RE.findall(text)
+            toks = TOKEN_RE.findall(text)
             if toks:
                 hashes = np.fromiter(
                     (zlib.crc32(t.encode("utf-8", "ignore")) for t in toks),

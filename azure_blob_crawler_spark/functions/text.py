@@ -12,12 +12,17 @@ the rest are engine-side additions for training-data pipelines.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # BPE-ish lexer: word pieces (max 8 chars, so long words cost multiple
 # tokens, like a real BPE) or single non-space punctuation.
 TOKEN_PATTERN = r"\w{1,8}|[^\w\s]"
+# The Python twin of TOKEN_PATTERN. Java regex (Spark) and RE2 (DuckDB) read
+# \w and \s as ASCII classes, so Python must too: "café" is caf, é.
+TOKEN_RE = re.compile(TOKEN_PATTERN, re.ASCII)
 SENTENCE_PATTERN = r"[.!?]+(\s+|$)"  # reference chunking.py:187
 WORD_PATTERN = r"\s+"
 

@@ -15,9 +15,11 @@ Pinned behaviors (each has a test):
 - page-aware packing for multi-page docs with the oversized-page
   re-chunk + ``replace(page, "")`` residue quirk (:123-174)
 
-Spark surface: Arrow-vectorized pandas UDFs returning ``array<string>`` —
-per-batch Python, zero shuffle; callers ``posexplode`` to (doc_id,
-chunk_index, content) rows.
+Spark surface: the crawl round calls ``chunk_document`` inside its one
+per-document Python pass (plans/crawl_round.py); ``make_chunk_doc_udf`` wraps
+it as an Arrow-vectorized pandas UDF returning ``array<string>`` for the
+contract queries. Callers ``posexplode`` to (doc_id, chunk_index, content)
+rows.
 """
 
 from __future__ import annotations
@@ -29,16 +31,15 @@ from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, StringType
 
 from azure_blob_crawler_spark import config
-from azure_blob_crawler_spark.functions.text import TOKEN_PATTERN
+from azure_blob_crawler_spark.functions.text import TOKEN_RE
 
-_TOKEN_RE = re.compile(TOKEN_PATTERN)
 # non-capturing group: Python re.split would interleave captured groups
 _SENT_RE = re.compile(r"[.!?]+(?:\s+|$)")
 
 
 def count_tokens(text: str) -> int:
     """Python-side twin of functions.text.token_count (same regex)."""
-    return len(_TOKEN_RE.findall(text))
+    return len(TOKEN_RE.findall(text))
 
 
 def make_counter(tokenizer: str = "lexer"):
@@ -181,6 +182,22 @@ def chunk_pages(
     return out
 
 
+def chunk_document(
+    pages,
+    full_content: str | None,
+    use_pages: bool,
+    max_tokens: int = config.CHUNK_MAX_TOKENS,
+    overlap_tokens: int = config.OVERLAP_TOKENS,
+    counter=count_tokens,
+) -> list[str]:
+    """Strategy dispatch (document_processor.py:310-317): page-aware packing
+    when the doc type is a paged document AND it has >1 page, else plain
+    text chunking of ``full_content``."""
+    if use_pages and pages is not None and len(pages) > 1:
+        return chunk_pages(list(pages), max_tokens, counter)
+    return chunk_text(full_content or "", max_tokens, overlap_tokens, counter)
+
+
 # --- Spark UDF surface ---------------------------------------------------
 
 
@@ -189,12 +206,10 @@ def make_chunk_doc_udf(
     overlap_tokens: int = config.OVERLAP_TOKENS,
     tokenizer: str = "lexer",
 ):
-    """Strategy-dispatching chunker: (pages, full_content, use_pages) -> chunks.
-
-    Mirrors document_processor.py:310-317 — page-aware when the doc type is a
-    paged document AND it has >1 page, else plain text chunking.
-    ``tokenizer='tiktoken'`` counts with cl100k_base when importable
-    (reference chunking.py:37-56), else the deterministic regex lexer.
+    """``chunk_document`` as a pandas UDF: (pages, full_content, use_pages)
+    -> chunks. ``tokenizer='tiktoken'`` counts with cl100k_base when
+    importable (reference chunking.py:37-56), else the deterministic regex
+    lexer.
     """
 
     @F.pandas_udf(ArrayType(StringType()))
@@ -202,12 +217,11 @@ def make_chunk_doc_udf(
         pages: pd.Series, full_content: pd.Series, use_pages: pd.Series
     ) -> pd.Series:
         counter = make_counter(tokenizer)  # resolved executor-side
-        res = []
-        for pgs, full, paged in zip(pages, full_content, use_pages):
-            if paged and pgs is not None and len(pgs) > 1:
-                res.append(chunk_pages(list(pgs), max_tokens, counter))
-            else:
-                res.append(chunk_text(full or "", max_tokens, overlap_tokens, counter))
-        return pd.Series(res)
+        return pd.Series(
+            [
+                chunk_document(pgs, full, paged, max_tokens, overlap_tokens, counter)
+                for pgs, full, paged in zip(pages, full_content, use_pages)
+            ]
+        )
 
     return chunk_doc_udf

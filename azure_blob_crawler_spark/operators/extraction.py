@@ -15,15 +15,16 @@ This module's wire format for paged documents is plain text with ``\\f``
 page breaks (pdf) / paragraph streams (docx). Binary bodies are out of
 scope: the fetch ``content`` column is text, so no fetch yields raw bytes.
 
-All heavy lifting is one Arrow-vectorized pandas UDF; span→pages/full_content
-reassembly is Catalyst-native (array_sort/transform/array_join).
+``extract_spans_py`` is the Python core; the crawl round runs it, with
+``reassemble_py``, inside its one per-document pass (plans/crawl_round.py).
+For a spans table, span→pages/full_content reassembly is Catalyst-native
+(``with_extraction``: array_sort/transform/array_join).
 """
 
 from __future__ import annotations
 
 import json
 
-import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
@@ -143,17 +144,14 @@ def extract_spans_py(name: str, content: str, size_bytes: int) -> list[dict]:
     return [{"kind": "media", "text": placeholder, "media_ref": name, "offset": 0}]
 
 
-def make_extract_spans_udf():
-    @F.pandas_udf(SPANS_TYPE)
-    def extract_spans(names: pd.Series, contents: pd.Series, sizes: pd.Series) -> pd.Series:
-        return pd.Series(
-            [
-                extract_spans_py(n or "", c or "", int(s or 0))
-                for n, c, s in zip(names, contents, sizes)
-            ]
-        )
-
-    return extract_spans
+def reassemble_py(spans: list[dict]) -> tuple[list[str], str, bool]:
+    """Python twin of ``with_extraction``: (pages, full_content, use_pages)
+    of one document's spans. Spark's ``trim`` strips U+0020 only, so the
+    paged full_content does too."""
+    pages = [s["text"] for s in sorted(spans, key=lambda s: s["offset"])]
+    joined = "\n\n".join(pages)
+    paged = any(s["kind"] in ("page", "section") for s in spans)
+    return pages, joined.strip(" ") if paged else joined, paged and len(spans) > 1
 
 
 # --- span reassembly: Catalyst-native -------------------------------------

@@ -27,7 +27,7 @@ from pyspark.sql import functions as F
 
 from azure_blob_crawler_spark import config
 from azure_blob_crawler_spark.functions.embedding import embed_query
-from azure_blob_crawler_spark.functions.text import TOKEN_PATTERN
+from azure_blob_crawler_spark.functions.text import TOKEN_PATTERN, TOKEN_RE
 from azure_blob_crawler_spark.functions.vectors import cosine
 from azure_blob_crawler_spark.operators.sequence import assign_global_seq
 
@@ -155,7 +155,7 @@ def text_search(
 
 
 def _py_tokens(text: str) -> list[str]:
-    return re.findall(TOKEN_PATTERN, text.lower())
+    return TOKEN_RE.findall(text.lower())
 
 
 def vector_search(

@@ -5,16 +5,17 @@ The reference has NO seen-set (at-least-once Service Bus delivery, duplicates
 possible — servicebus_client.py:84-189); the north rule adds one. Design:
 
 1. **Exact check** (``filter_unseen``) — candidates the cuckoo shards call
-   "definitely new" skip it; the maybe-seen suspects are left-anti joined
+   "definitely new" pass it; the maybe-seen suspects are left-anti joined
    against the seen table on ``url_hash``. No false positives/negatives:
-   the prefilter only prunes the join's input.
+   the prefilter only decides which candidates the join may drop.
 2. **Cuckoo chain** (per bucket, 16-bit fingerprints, 4 slots/bucket) —
    supports deletion and bounded memory; state is a binary blob per store
-   bucket, probed/updated via grouped ``applyInPandas`` so each Spark task
-   touches exactly one filter shard. A shard is a CHAIN of same-geometry
-   cuckoo filters (the Dynamic Cuckoo Filter construction): when the newest
-   sub-filter rejects an insert, a fresh empty sub-filter is appended and the
-   homeless fingerprint placed there — inserts NEVER silently drop keys, so
+   bucket, probed and updated in ONE cogrouped ``applyInPandas`` pass
+   (``cuckoo_probe``) so each Spark task touches exactly one filter shard.
+   A shard is a CHAIN of same-geometry cuckoo filters (the Dynamic Cuckoo
+   Filter construction): when the newest sub-filter rejects an insert, a
+   fresh empty sub-filter is appended and the homeless fingerprint placed
+   there — inserts NEVER silently drop keys, so
    the "no false negatives" prefilter invariant holds at any fill level
    (round-1 judge repro: 140k keys into one 2^16-sized shard previously lost
    10,453 keys; the chain loses zero — pinned by
@@ -238,92 +239,101 @@ class CuckooChain:
         return False
 
 
+SHARD_COLS = ("bucket", "blob", "chain_len")
+
+
 def cuckoo_probe(
     candidates: DataFrame,
-    filters: DataFrame,
-    n_store_buckets: int = config.SEEN_BUCKETS,
-    hash_col: str = "url_hash",
-) -> DataFrame:
-    """Tag candidates with cuckoo membership, co-grouped per store bucket.
-
-    ``filters``: (bucket int, blob binary). Each task deserializes exactly
-    one shard — memory per task is one chain, regardless of total keys."""
-    cand = candidates.withColumn(
-        "__cb", store_bucket(hash_col, n_store_buckets)
-    )
-    out_schema = ", ".join(
-        f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
-    ) + ", maybe_seen boolean"
-
-    def probe(key, cand_pdf, filt_pdf):
-        cand_pdf = cand_pdf.drop(columns=["__cb"])
-        if len(filt_pdf):
-            cf = CuckooChain.from_bytes(filt_pdf["blob"].iloc[0])
-            cand_pdf["maybe_seen"] = cf.contains_many(
-                cand_pdf[hash_col].to_numpy(dtype=np.int64)
-            )
-        else:
-            cand_pdf["maybe_seen"] = False
-        return cand_pdf
-
-    grouped_c = cand.groupBy("__cb")
-    grouped_f = filters.withColumnRenamed("bucket", "__cb").groupBy("__cb")
-    return grouped_c.cogroup(grouped_f).applyInPandas(probe, out_schema)
-
-
-def filter_unseen(
-    candidates: DataFrame,
     shards: DataFrame,
-    seen: DataFrame,
-    n_store_buckets: int,
-    hash_col: str = "url_hash",
-) -> DataFrame:
-    """Rows of ``candidates`` whose hash is not in ``seen``.
-    ``candidates`` must be unique on ``hash_col``.
-
-    The cuckoo ``shards`` (built with the same ``n_store_buckets``) tag each
-    candidate one shard per task; only the maybe-seen suspects reach the
-    exact left-anti join against ``seen``. The prefilter has no false
-    negatives as long as shards ⊇ seen, and a false positive only costs the
-    exact check, so the result is exactly ``candidates`` minus ``seen``."""
-    tagged = cuckoo_probe(candidates, shards, n_store_buckets, hash_col)
-    suspects = tagged.filter(F.col("maybe_seen")).drop("maybe_seen")
-    definitely_new = tagged.filter(~F.col("maybe_seen")).drop("maybe_seen")
-    confirmed_new = suspects.join(seen.select(hash_col), hash_col, "left_anti")
-    return definitely_new.unionByName(confirmed_new)
-
-
-def cuckoo_insert(
-    new_keys: DataFrame,
-    filters: DataFrame | None,
     n_store_buckets: int = config.SEEN_BUCKETS,
     hash_col: str = "url_hash",
     shard_capacity: int = 1 << 16,
 ) -> DataFrame:
-    """Insert keys, returning the updated (bucket, blob) shards (only shards
-    with new keys are emitted — merge them into the store). New shards are
-    sized from max(shard_capacity, incoming batch); over-full shards grow by
-    chaining (never drop keys)."""
-    keys = new_keys.select(hash_col).withColumn(
-        "__cb", store_bucket(hash_col, n_store_buckets)
-    )
+    """One cogroup pass per store bucket: probe, then insert.
 
-    def upd(key, keys_pdf, filt_pdf):
-        arr = keys_pdf[hash_col].to_numpy(dtype=np.int64)
+    Each task deserializes exactly one shard of ``shards`` (bucket int, blob
+    binary) — memory per task is one chain, regardless of total keys. It
+    tags every candidate ``maybe_seen`` against the shard *as read*, then
+    inserts the candidates that are not maybe-seen. Inserting only those
+    gives the same membership as inserting every candidate, because
+    ``CuckooChain.insert`` is a no-op for a fingerprint already present.
+    A bucket with no shard gets one sized from max(shard_capacity, its
+    candidates); an over-full shard grows by chaining (never drops keys).
+
+    Returns two kinds of rows in one frame, so one persist serves both:
+    - a candidate row per candidate: its columns plus ``maybe_seen``, with
+      NULL ``SHARD_COLS``;
+    - a shard row per bucket the cogroup touches (every bucket of
+      ``shards`` or of ``candidates``): ``bucket``, the new ``blob`` and its
+      ``chain_len`` (sub-filter count), with NULL candidate columns.
+    ``filter_unseen`` reads the first kind, ``shards_of`` the second."""
+    cand = candidates.withColumn("__cb", store_bucket(hash_col, n_store_buckets))
+    cand_cols = list(candidates.columns)
+    out_schema = ", ".join(
+        f"{f.name} {f.dataType.simpleString()}" for f in candidates.schema.fields
+    ) + ", maybe_seen boolean, bucket int, blob binary, chain_len int"
+
+    def probe(key, cand_pdf, filt_pdf):
+        keys = cand_pdf[hash_col].to_numpy(dtype=np.int64)
         if len(filt_pdf):
-            cf = CuckooChain.from_bytes(filt_pdf["blob"].iloc[0])
+            blob = filt_pdf["blob"].iloc[0]
+            cf = CuckooChain.from_bytes(blob)
+            maybe = cf.contains_many(keys)
         else:
-            cf = CuckooChain.sized(max(shard_capacity, len(arr)))
-        cf.insert_many(arr)
-        return pd.DataFrame({"bucket": [key[0]], "blob": [cf.to_bytes()]})
+            blob = None
+            cf = CuckooChain.sized(max(shard_capacity, len(keys)))
+            maybe = np.zeros(len(keys), dtype=bool)
+        new = keys[~maybe]
+        for k in new:
+            cf.insert(int(k))
+        if len(new) or blob is None:
+            blob = cf.to_bytes()
+        tagged = cand_pdf[cand_cols].assign(maybe_seen=maybe)
+        shard = pd.DataFrame({c: pd.Series([None], dtype=object) for c in tagged.columns})
+        shard = shard.assign(bucket=[int(key[0])], blob=[blob], chain_len=[len(cf.filters)])
+        # object-typed NULLs keep the 64-bit hashes exact (a float NaN
+        # column would round them)
+        return pd.concat([tagged, shard], ignore_index=True)
 
-    grouped_k = keys.groupBy("__cb")
-    if filters is None:
-        empty = keys.sparkSession.createDataFrame([], "bucket int, blob binary")
-        grouped_f = empty.withColumnRenamed("bucket", "__cb").groupBy("__cb")
-    else:
-        grouped_f = filters.withColumnRenamed("bucket", "__cb").groupBy("__cb")
-    return grouped_k.cogroup(grouped_f).applyInPandas(upd, "bucket int, blob binary")
+    grouped_c = cand.groupBy("__cb")
+    grouped_f = shards.select(F.col("bucket").alias("__cb"), "blob").groupBy("__cb")
+    return grouped_c.cogroup(grouped_f).applyInPandas(probe, out_schema)
+
+
+def shards_of(probed: DataFrame) -> DataFrame:
+    """The (bucket, blob, chain_len) shard rows of a ``cuckoo_probe`` result."""
+    return probed.filter(F.col("blob").isNotNull()).select(*SHARD_COLS)
+
+
+def filter_unseen(probed: DataFrame, seen: DataFrame, hash_col: str = "url_hash") -> DataFrame:
+    """The candidates of a ``cuckoo_probe`` result whose hash is not in
+    ``seen`` (candidates must be unique on ``hash_col``).
+
+    One left-anti join against ``seen``, conditioned on ``maybe_seen``: a
+    candidate the shards call definitely new can match nothing, so only the
+    suspects are decided by the exact check. The prefilter has no false
+    negatives as long as shards ⊇ seen, and a false positive only costs the
+    exact check, so the result is exactly the candidates minus ``seen``.
+    The probe appears once in the plan, so it runs once."""
+    tagged = probed.filter(F.col("maybe_seen").isNotNull()).drop(*SHARD_COLS)
+    keys = seen.select(F.col(hash_col).alias("__seen"))
+    match = (F.col(hash_col) == F.col("__seen")) & F.col("maybe_seen")
+    return tagged.join(keys, match, "left_anti").drop("maybe_seen")
+
+
+def cuckoo_insert(
+    new_keys: DataFrame,
+    shards: DataFrame | None,
+    n_store_buckets: int = config.SEEN_BUCKETS,
+    hash_col: str = "url_hash",
+    shard_capacity: int = 1 << 16,
+) -> DataFrame:
+    """Insert keys into ``shards`` (None: no shards yet), returning the
+    (bucket, blob, chain_len) shard rows of ``cuckoo_probe``."""
+    keys = new_keys.select(hash_col)
+    if shards is None:
+        shards = keys.sparkSession.createDataFrame([], "bucket int, blob binary")
+    return shards_of(cuckoo_probe(keys, shards, n_store_buckets, hash_col, shard_capacity))
 
 
 MAX_CHAIN = 4  # rebuild a shard's geometry once its chain grows past this
@@ -356,20 +366,15 @@ def rebuild_overgrown_shards(
     passes ``store.read_buckets(frontier, overgrown)`` and the authoritative
     scan prunes to the rebuilt buckets instead of reading the whole table.
 
-    Cost: one header-peek over the *touched* shards (8-byte chain-length
-    field, no table deserialization) + one bucket-local key scan per
-    overgrown shard. Returns ``shards`` unchanged (checkpointed) when no
-    chain is overgrown."""
-    # materialize once without leaving a long-lived cache entry; both the
-    # length peek and the caller's merge reuse this
-    shards = shards.localCheckpoint(eager=True)
-
-    @F.pandas_udf("int")
-    def _chain_len(blob: pd.Series) -> pd.Series:
-        return blob.map(lambda b: int.from_bytes(b[:8], "little"))
-
-    lens = shards.select("bucket", _chain_len("blob").alias("k")).collect()
-    over = [int(r["bucket"]) for r in lens if r["k"] > max_chain]
+    ``shards`` carries (bucket, blob, chain_len) — ``shards_of`` a
+    ``cuckoo_probe`` result. It is read twice (the chain lengths, then the
+    caller's merge), so pass a persisted frame. Cost: one collect of the
+    touched shards' chain lengths + one bucket-local key scan per overgrown
+    shard. Returns the (bucket, blob) shards, unchanged when no chain is
+    overgrown."""
+    lens = shards.select("bucket", "chain_len").collect()
+    over = [int(r["bucket"]) for r in lens if r["chain_len"] > max_chain]
+    shards = shards.select("bucket", "blob")
     if not over:
         return shards
 

@@ -3,11 +3,22 @@
 One round = the engine equivalent of the reference's full message lifecycle
 (SURVEY.md §3.1: receive → extract → chunk → embed → upload → complete):
 
-  claim (scheduler) → mark in_flight → fetch (deterministic simulator UDF)
-  → admission → span extraction → chunking → embedding → MERGE chunks +
-  doc_meta → link extraction → canonicalize → seen-set dedup (cuckoo
-  prefilter + exact anti-join) → MERGE frontier (done states + discovered
-  links) → commit
+  claim (scheduler) → mark in_flight → document pass → MERGE chunks +
+  doc_meta → link extraction → canonicalize → seen-set pass → exact
+  anti-join → MERGE cuckoo shards → MERGE frontier (done states +
+  discovered links) → commit
+
+A round crosses into Python twice, once per phase, because every wave of
+Python tasks has a fixed cost that dwarfs the work inside it:
+- the **document pass** (``document_pass``): one ``mapInPandas`` over the
+  claimed rows runs fetch (deterministic simulator) → admission → span
+  extraction → pages/full_content → chunking → embedding, and returns one
+  row per claimed URL with its chunks and vectors nested; the chunk rows,
+  their token counts and ids are Catalyst expressions over that row;
+- the **seen-set pass** (``seen.cuckoo_probe``): one cogroup per cuckoo
+  shard tags each discovered link maybe-seen against the shard as read,
+  inserts the rest, and returns the new shard blobs in the same frame.
+Each pass is persisted once and read by every later step of its phase.
 
 State machine per frontier row (reference complete/abandon/dead-letter
 semantics, servicebus_client.py:191-264 + exceptions.py taxonomy):
@@ -23,32 +34,30 @@ lineage + fetch/dedup/emit metrics).
 
 from __future__ import annotations
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from azure_blob_crawler_spark import config
-from azure_blob_crawler_spark.functions.embedding import make_embed_udf, truncate_for_embedding
+from azure_blob_crawler_spark.functions.embedding import embed_texts
 from azure_blob_crawler_spark.functions.text import token_count
 from azure_blob_crawler_spark.functions.urls import canonical_url, url_hash, url_host
 from azure_blob_crawler_spark.operators.admission import MAX_BYTES, nonempty_content
-from azure_blob_crawler_spark.operators.chunker import make_chunk_doc_udf
-from azure_blob_crawler_spark.operators.extraction import (
-    full_content_of,
-    is_paged_doc,
-    make_extract_spans_udf,
-    pages_of,
-)
+from azure_blob_crawler_spark.operators.chunker import chunk_document
+from azure_blob_crawler_spark.operators.extraction import extract_spans_py, reassemble_py
 from azure_blob_crawler_spark.operators.linkextract import extract_links
 from azure_blob_crawler_spark.operators.scheduler import claim_round, hot_host_widths
 from azure_blob_crawler_spark.operators.sequence import assign_global_seq
 from azure_blob_crawler_spark.operators.seen import (
     cuckoo_insert,
+    cuckoo_probe,
     filter_unseen,
     rebuild_overgrown_shards,
+    shards_of,
 )
 from azure_blob_crawler_spark.operators.search_index import TextSearchIndex
 from azure_blob_crawler_spark.sources.store import SnapshotStore
-from azure_blob_crawler_spark.sources.synthetic import make_fetch_udf
+from azure_blob_crawler_spark.sources.synthetic import content_for_url, fetch_ok
 
 FRONTIER = "frontier"
 CHUNKS = "chunks"
@@ -56,6 +65,67 @@ DOC_META = "doc_meta"
 CLAIM_LOG = "claim_log"
 SEEN_CUCKOO = "seen_cuckoo"
 SEARCH_PREFIX = "search"
+
+# the columns the document pass adds to its input rows
+DOC_PASS_COLUMNS = (
+    "size bigint, ok boolean, full_content string,"
+    " chunks array<struct<content: string, vector: array<float>>>"
+)
+# the embedding-input cap of functions/embedding.truncate_for_embedding
+# (document_processor.py:190-196): an over-budget chunk embeds its prefix
+EMBED_INPUT_CHARS = config.EMBEDDING_MAX_TOKENS * config.FALLBACK_CHARS_PER_TOKEN
+
+
+def documents_batch(pdf: pd.DataFrame, embed_dim: int) -> pd.DataFrame:
+    """The document pass over one batch of fetched rows (url, content, size,
+    ok, ...): admission → extract spans → pages/full_content → chunk →
+    embed. Returns the rows without ``content``, plus ``full_content``
+    (NULL unless the fetch succeeded and the size passed the admission
+    gate) and ``chunks`` (content, vector), empty unless full_content is
+    non-blank by Spark's ``trim`` (U+0020 only, as ``nonempty_content``).
+    The batch's chunks embed in one call."""
+    fulls, counts, texts = [], [], []
+    for url, content, size, ok in zip(pdf["url"], pdf["content"], pdf["size"], pdf["ok"]):
+        full, pieces = None, []
+        if ok and size <= MAX_BYTES:
+            pages, full, paged = reassemble_py(extract_spans_py(url, content, int(size)))
+            if full.strip(" "):
+                pieces = chunk_document(pages, full, paged)
+        fulls.append(full)
+        counts.append(len(pieces))
+        texts.extend(pieces)
+    capped = pd.Series([t[:EMBED_INPUT_CHARS] for t in texts], dtype=object)
+    vectors = list(embed_texts(capped, embed_dim))
+    chunks, at = [], 0
+    for n in counts:
+        chunks.append([{"content": texts[j], "vector": vectors[j]} for j in range(at, at + n)])
+        at += n
+    return pdf.drop(columns="content").assign(full_content=fulls, chunks=chunks)
+
+
+def document_pass(work: DataFrame, embed_dim: int) -> DataFrame:
+    """The round's one Python pass over its claimed rows (url, depth,
+    attempts, ...): the deterministic fetch (``content_for_url`` and
+    ``fetch_ok``; swap them for a real fetcher to crawl real bytes), then
+    ``documents_batch``. Returns ``work``'s rows, one per URL, plus
+    ``size``, ``ok``, ``full_content`` and ``chunks``. Fetch failures follow
+    the reference's abandon path (servicebus_processor.py:243-250): the
+    caller redelivers them."""
+
+    def documents(batches):
+        for pdf in batches:
+            fetched = [content_for_url(u, int(d)) for u, d in zip(pdf["url"], pdf["depth"])]
+            yield documents_batch(
+                pdf.assign(
+                    content=[c for c, _ in fetched],
+                    size=[n for _, n in fetched],
+                    ok=[fetch_ok(u, int(a)) for u, a in zip(pdf["url"], pdf["attempts"])],
+                ),
+                embed_dim,
+            )
+
+    columns = ", ".join(f"{f.name} {f.dataType.simpleString()}" for f in work.schema.fields)
+    return work.mapInPandas(documents, f"{columns}, {DOC_PASS_COLUMNS}")
 
 
 class CrawlRunner:
@@ -93,10 +163,6 @@ class CrawlRunner:
             self.store, SEARCH_PREFIX,
             n_term_buckets=n_buckets, n_doc_buckets=n_buckets,
         )
-        self._fetch = make_fetch_udf()
-        self._extract = make_extract_spans_udf()
-        self._chunk = make_chunk_doc_udf()
-        self._embed = make_embed_udf(embed_dim)
         # cached per-host salt widths for the claim (round-4 verdict: the
         # O(pending) width derivation must not run per round). None →
         # derive on next claim; afterwards reused until pending-set drift
@@ -144,7 +210,7 @@ class CrawlRunner:
         # binary blob per bucket; invariant cuckoo ⊇ frontier keys)
         shards = cuckoo_insert(
             deduped.select("url_hash"), None, n_store_buckets=self.n_buckets
-        )
+        ).select("bucket", "blob")
         self.store.create(SEEN_CUCKOO, shards, key="bucket", n_buckets=8)
         deduped.unpersist()
         self.store.create(
@@ -238,51 +304,37 @@ class CrawlRunner:
         )
         self._merge_or_create(CLAIM_LOG, log_rows, key="log_key")
 
-        # 3. fetch + admission (size gate BEFORE extraction UDFs); fetch
-        # failures follow the reference's abandon path (attempts+1, state
-        # back to pending, dead-letter at MAX_ATTEMPTS —
-        # servicebus_processor.py:243-250, deploy-infrastructure.ps1:257).
-        # The claim's global orderBy+limit collapses to ONE partition — spread
-        # the round across the cluster before any per-document UDF runs, or
-        # the whole fetch/extract/chunk/embed pipeline executes on one task.
+        # 3. the document pass: fetch → admission (size gate BEFORE
+        # extraction) → extract → chunk → embed, one row per claimed URL.
+        # The claim's global orderBy+limit collapses to ONE partition —
+        # spread the round across the cluster before the pass runs, or it
+        # executes on one task.
         par = self.spark.sparkContext.defaultParallelism
         work = claimed.repartition(par, "url_hash") if n_claimed > par else claimed
-        fetched = work.withColumn("__f", self._fetch("url", "depth", "attempts")).select(
-            "*",
-            F.col("__f.content").alias("content"),
-            F.col("__f.size").alias("size"),
-            F.col("__f.ok").alias("ok"),
-        ).drop("__f").persist()
-        admitted = fetched.filter(F.col("ok") & (F.col("size") <= MAX_BYTES))
-        skipped = fetched.filter(F.col("ok") & (F.col("size") > MAX_BYTES))
-        failed = fetched.filter(~F.col("ok"))
-
-        # 4. extract spans → pages/full_content → chunk → embed
         docs = (
-            admitted.withColumn("spans", self._extract("url", "content", "size"))
-            .withColumn("pages", pages_of(F.col("spans")))
-            .withColumn("full_content", full_content_of(F.col("spans")))
-            .withColumn("use_pages", is_paged_doc(F.col("spans")))
+            document_pass(work, self.embed_dim)
             .withColumn("doc_id", F.regexp_replace("url", "[^A-Za-z0-9_-]", "_"))
             .persist()
         )
-        nonempty = docs.filter(nonempty_content(F.col("full_content")))
-        chunks = (
-            nonempty.select(
-                "doc_id", "url",
-                F.posexplode(self._chunk("pages", "full_content", "use_pages")).alias(
-                    "chunk_index", "content_chunk"
-                ),
-            )
-            .withColumn("chunk_id", F.concat_ws("_", "doc_id", F.lit("chunk"), "chunk_index"))
-            .withColumn("n_tokens", token_count(F.col("content_chunk")))
-            # embedding-input cap (document_processor.py:190-196): an
-            # over-budget chunk embeds its truncated prefix, never raw
-            .withColumn("vector", self._embed(truncate_for_embedding(F.col("content_chunk"))))
-            .select("chunk_id", "doc_id", "url", "chunk_index",
-                    F.col("content_chunk").alias("content"), "n_tokens", "vector")
-        ).persist()  # consumed by the chunks MERGE and the doc_meta rollup
-        n_chunks = chunks.count()
+        # one aggregate job runs the pass and counts every outcome
+        counts = docs.agg(
+            F.sum(F.when(F.col("ok") & (F.col("size") > MAX_BYTES), 1).otherwise(0)).alias("s"),
+            F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("f"),
+            F.sum(F.size("chunks")).alias("c"),
+        ).collect()[0]
+        n_skipped, n_failed = int(counts["s"] or 0), int(counts["f"] or 0)
+        n_chunks = int(counts["c"] or 0)
+
+        # 4. chunk rows: the pass's nested chunks, exploded in Catalyst
+        chunks = docs.select(
+            "doc_id", "url", F.posexplode("chunks").alias("chunk_index", "__c")
+        ).select(
+            F.concat_ws("_", "doc_id", F.lit("chunk"), "chunk_index").alias("chunk_id"),
+            "doc_id", "url", "chunk_index",
+            F.col("__c.content").alias("content"),
+            token_count(F.col("__c.content")).alias("n_tokens"),
+            F.col("__c.vector").alias("vector"),
+        )
         if self.store.exists(CHUNKS):
             self.store.merge(CHUNKS, chunks)
         elif n_chunks:
@@ -295,6 +347,7 @@ class CrawlRunner:
             self.search_index.update(chunks, approx_rows=n_chunks)
 
         # 5. doc metadata (document_processor.py:327-336 analogue)
+        nonempty = docs.filter(nonempty_content(F.col("full_content")))
         meta = (
             nonempty.select("doc_id", "url", "depth")
             .join(
@@ -308,11 +361,11 @@ class CrawlRunner:
             .withColumn("processed_round", F.lit(rnd))
         )
         self._merge_or_create(DOC_META, meta, key="doc_id")
-        chunks.unpersist()
 
         # 6. discovery: links → canonical → batch-dedup → unseen → new frontier rows
         links = extract_links(
-            docs.select("url", "depth", "claim_rank", "full_content")
+            docs.filter(F.col("full_content").isNotNull())
+            .select("url", "depth", "claim_rank", "full_content")
         ).select(
             F.col("link_url").alias("url"),
             F.col("link_host").alias("host"),
@@ -327,9 +380,12 @@ class CrawlRunner:
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        fresh = filter_unseen(
-            batch_unique, self.store.read(SEEN_CUCKOO), frontier, self.n_buckets
+        # the seen-set pass probes and inserts in one cogroup per shard;
+        # persisted, it feeds the exact check and the shard commit below
+        probed = cuckoo_probe(
+            batch_unique, self.store.read(SEEN_CUCKOO), self.n_buckets
         ).persist()
+        fresh = filter_unseen(probed, frontier).persist()
         n_new = fresh.count()
         # global numbering without an unbounded single-partition window:
         # small rounds rank in one task (bound proven by the count just
@@ -352,11 +408,6 @@ class CrawlRunner:
         # commits (a cuckoo false positive only costs an exact check; a
         # frontier key missing from the cuckoo would be a correctness bug)
         if n_new:
-            shards = self.store.read(SEEN_CUCKOO)
-            updated = cuckoo_insert(
-                new_rows.select("url_hash"), shards, n_store_buckets=self.n_buckets
-            )
-
             # bound chain growth: shards whose chain exceeds MAX_CHAIN are
             # rebuilt at larger geometry from the authoritative key source
             # (frontier ∪ this round's new rows — preserves cuckoo ⊇
@@ -372,14 +423,14 @@ class CrawlRunner:
                 return cur.select("url_hash").unionByName(new)
 
             updated = rebuild_overgrown_shards(
-                updated, _keys_for, n_store_buckets=self.n_buckets
+                shards_of(probed), _keys_for, n_store_buckets=self.n_buckets
             )
             self.store.merge(SEEN_CUCKOO, updated)
 
         # 7. final frontier commit: done states + failure redeliveries +
         # discovered rows + metrics
         new_attempts = F.when(~F.col("ok"), F.col("attempts") + 1).otherwise(F.col("attempts"))
-        done_states = fetched.withColumn(
+        done_states = docs.withColumn(
             "state",
             F.when(
                 ~F.col("ok"),
@@ -393,12 +444,6 @@ class CrawlRunner:
             "url_hash", "url", "host", "depth", "discovery_seq", "state",
             new_attempts.alias("attempts"),
         )
-        # one aggregate job for both outcome counts (not two .count() jobs)
-        counts = fetched.agg(
-            F.sum(F.when(F.col("ok") & (F.col("size") > MAX_BYTES), 1).otherwise(0)).alias("s"),
-            F.sum(F.when(~F.col("ok"), 1).otherwise(0)).alias("f"),
-        ).collect()[0]
-        n_skipped, n_failed = int(counts["s"] or 0), int(counts["f"] or 0)
         summary = self.store.merge(
             FRONTIER,
             done_states.unionByName(new_rows),
@@ -415,8 +460,8 @@ class CrawlRunner:
             },
         )
         claimed.unpersist()
-        fetched.unpersist()
         docs.unpersist()
+        probed.unpersist()
         fresh.unpersist()
         frontier.unpersist()
         # drift for the width cache: new pending rows this round (failed

@@ -2,8 +2,8 @@
 
 Two consumers must agree bit-for-bit:
 - the Spark engine (frontier built natively with column expressions so a
-  10^7-row bench frontier generates in-JVM without Python; fetch/content
-  simulated in a pandas UDF), and
+  10^7-row bench frontier generates in-JVM without Python; the crawl
+  round's per-document pass calls ``content_for_url``/``fetch_ok``), and
 - the pure-Python reference-semantics simulator (plans/simulator.py) used by
   the north-rule ordering/seen-set equality tests.
 
@@ -19,14 +19,6 @@ import zlib
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    ArrayType,
-    IntegerType,
-    LongType,
-    StringType,
-    StructField,
-    StructType,
-)
 
 from azure_blob_crawler_spark.operators.extraction import SPANS_TYPE
 
@@ -226,31 +218,6 @@ def fetch_ok(url: str, attempts: int) -> bool:
     if crc(f"{url}!fail") % 23 == 0 and attempts == 0:
         return False
     return True
-
-
-def make_fetch_udf():
-    """pandas UDF: (url, depth, attempts) -> struct(content, size, ok) — the
-    deterministic stand-in for the reference's blob download
-    (blob_client.py:93-120) with failure injection."""
-    from pyspark.sql.types import BooleanType
-
-    ret = StructType(
-        [
-            StructField("content", StringType()),
-            StructField("size", LongType()),
-            StructField("ok", BooleanType()),
-        ]
-    )
-
-    @F.pandas_udf(ret)
-    def fetch(urls: pd.Series, depths: pd.Series, attempts: pd.Series) -> pd.DataFrame:
-        rows = []
-        for u, d, a in zip(urls, depths, attempts):
-            content, size = content_for_url(u, int(d))
-            rows.append((content, size, fetch_ok(u, int(a))))
-        return pd.DataFrame(rows, columns=["content", "size", "ok"])
-
-    return fetch
 
 
 # --- interleaved spans corpus from driver testdata ----------------------------

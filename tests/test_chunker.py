@@ -139,3 +139,18 @@ def test_chunker_tiktoken_parity_when_available():
     chunks = chunk_text("word " * 200, max_tokens=30, overlap_tokens=5, counter=counter)
     assert chunks
     assert all(counter(c) <= 35 for c in chunks)
+
+
+def test_count_tokens_matches_spark_token_count(spark):
+    """The chunker budgets with Python ``count_tokens``; the chunks table's
+    ``n_tokens`` is Spark ``token_count``. Java regex reads \\w as ASCII, so
+    the Python twin must: "café" is caf, é in both."""
+    from pyspark.sql import functions as F
+
+    from azure_blob_crawler_spark.functions.text import token_count
+
+    texts = ["café au lait", "naïve—straße", "日本語 text", "tab\tand\u00a0nbsp", "ascii words"]
+    df = spark.createDataFrame([(i, t) for i, t in enumerate(texts)], "i int, t string")
+    got = [r["n"] for r in df.orderBy("i").select(token_count(F.col("t")).alias("n")).collect()]
+    assert got == [count_tokens(t) for t in texts]
+    assert count_tokens("café au lait") == 4

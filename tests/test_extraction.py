@@ -3,13 +3,15 @@ invariant (kind, text, media_ref, order), full-content reassembly."""
 
 import json
 
+from pyspark.sql.types import StringType, StructField, StructType
 
 from azure_blob_crawler_spark import config
 from azure_blob_crawler_spark.operators.admission import split_admission
 from azure_blob_crawler_spark.operators.extraction import (
+    SPANS_TYPE,
     extract_spans_py,
     flatten_json_text,
-    make_extract_spans_udf,
+    reassemble_py,
     with_extraction,
 )
 
@@ -69,10 +71,13 @@ def test_udf_and_reassembly(spark):
         ("b.pdf", "p1\fp2\fp3", 8),
         ("c.bin", "", 1024),
     ]
-    df = spark.createDataFrame(rows, "url string, content string, size long")
-    udf = make_extract_spans_udf()
-    out = with_extraction(df.withColumn("spans", udf("url", "content", "size")))
+    schema = StructType([StructField("url", StringType()), StructField("spans", SPANS_TYPE)])
+    spans = {u: extract_spans_py(u, c, s) for u, c, s in rows}
+    out = with_extraction(spark.createDataFrame(list(spans.items()), schema))
     got = {r["url"]: r for r in out.collect()}
+    # the Python twin the crawl's document pass uses agrees
+    for u, r in got.items():
+        assert reassemble_py(spans[u]) == (r["pages"], r["full_content"], r["use_pages"])
     assert got["a.txt"]["full_content"] == "plain text doc"
     assert got["a.txt"]["use_pages"] is False
     assert got["b.pdf"]["pages"] == [

@@ -216,6 +216,59 @@ def test_resume_equals_uninterrupted(spark, tmp_path, sim_result):
     assert runner2.seen_set() == sim_result.seen
 
 
+def test_crash_between_cuckoo_and_frontier_commits(spark, tmp_path, sim_result):
+    """Crash on round 2's frontier commit, after its cuckoo shards have
+    committed; recover and rerun → the simulator's claim log and seen set,
+    and every frontier key probes maybe-seen against the stored shards
+    (cuckoo ⊇ frontier)."""
+    import numpy as np
+
+    from azure_blob_crawler_spark.operators.seen import CuckooChain, store_bucket
+    from azure_blob_crawler_spark.plans.crawl_round import FRONTIER, SEEN_CUCKOO
+
+    root = str(tmp_path / "crash-commit")
+    runner = CrawlRunner(spark, root, round_size=ROUND_SIZE, n_buckets=8)
+    seeds = spark.createDataFrame(
+        [(e["url"], e["depth"], e["discovery_seq"]) for e in synthetic.seed_frontier_py(N_SEEDS)],
+        "url string, depth int, discovery_seq long",
+    )
+    runner.init_frontier(seeds, synthetic.robots_df(spark))
+    runner.run_round()  # round 1 committed
+    cuckoo_v = runner.store.current_version(SEEN_CUCKOO)
+
+    merge = runner.store.merge
+
+    def crash_on_round2_commit(name, updates, **kw):
+        summary = kw.get("summary") or {}
+        if name == FRONTIER and summary.get("phase") == "commit" and summary["round"] == 2:
+            raise RuntimeError("injected crash")
+        return merge(name, updates, **kw)
+
+    runner.store.merge = crash_on_round2_commit
+    with pytest.raises(RuntimeError, match="injected crash"):
+        runner.run_round()
+    assert runner.store.current_version(SEEN_CUCKOO) == cuckoo_v + 1
+
+    runner2 = CrawlRunner(spark, root, round_size=ROUND_SIZE, n_buckets=8)
+    assert runner2.recover() == ROUND_SIZE
+    runner2.run(max_rounds=100)
+    assert runner2.claim_log() == sim_result.claim_log
+    assert runner2.seen_set() == sim_result.seen
+
+    shards = {
+        r["bucket"]: CuckooChain.from_bytes(bytes(r["blob"]))
+        for r in runner2.store.read(SEEN_CUCKOO).collect()
+    }
+    keys = runner2.store.read(FRONTIER).select(
+        "url_hash", store_bucket("url_hash", 8).alias("b")
+    ).collect()
+    by_shard: dict[int, list[int]] = {}
+    for r in keys:
+        by_shard.setdefault(r["b"], []).append(r["url_hash"])
+    for b, hashes in by_shard.items():
+        assert shards[b].contains_many(np.array(hashes, dtype=np.int64)).all(), b
+
+
 def test_unparseable_seed_is_dropped(spark, tmp_path):
     """A seed URL java.net.URI rejects (a space in its path) canonicalizes
     to NULL: ``init_frontier`` drops it instead of keying a NULL-url row,

@@ -1,6 +1,6 @@
 """Seen-set: filter_unseen exactness (cuckoo prefilter + exact anti-join),
-cuckoo chain membership/delete/serialization/growth, distributed
-probe/insert."""
+cuckoo chain membership/delete/serialization/growth, the one-pass
+distributed probe+insert."""
 
 import numpy as np
 from pyspark.sql import functions as F
@@ -12,6 +12,7 @@ from azure_blob_crawler_spark.operators.seen import (
     cuckoo_probe,
     filter_unseen,
     rebuild_overgrown_shards,
+    shards_of,
 )
 
 
@@ -23,7 +24,7 @@ def test_filter_unseen_exact(spark):
     seen = _hashes(spark, 0, 1000)
     shards = cuckoo_insert(seen, None, n_store_buckets=8)
     cand = spark.range(500, 1500).select(F.col("id").alias("url_hash"), F.lit("x").alias("p"))
-    fresh = filter_unseen(cand, shards, seen, 8)
+    fresh = filter_unseen(cuckoo_probe(cand, shards, 8), seen)
     got = sorted(r["url_hash"] for r in fresh.collect())
     assert got == list(range(1000, 1500))
 
@@ -32,7 +33,7 @@ def test_filter_unseen_empty_seen(spark):
     cand = _hashes(spark, 0, 10)
     empty = _hashes(spark, 0, 0)
     shards = cuckoo_insert(empty, None, n_store_buckets=8)
-    assert filter_unseen(cand, shards, empty, 8).count() == 10
+    assert filter_unseen(cuckoo_probe(cand, shards, 8), empty).count() == 10
 
 
 def test_filter_unseen_exact_check_decides(spark):
@@ -41,8 +42,41 @@ def test_filter_unseen_exact_check_decides(spark):
     shards = cuckoo_insert(_hashes(spark, 0, 1500), None, n_store_buckets=8)
     seen = _hashes(spark, 0, 1000)
     cand = _hashes(spark, 500, 2000)
-    got = sorted(r["url_hash"] for r in filter_unseen(cand, shards, seen, 8).collect())
+    fresh = filter_unseen(cuckoo_probe(cand, shards, 8), seen)
+    got = sorted(r["url_hash"] for r in fresh.collect())
     assert got == list(range(1000, 2000))
+
+
+def test_filter_unseen_runs_the_probe_once(spark):
+    """The probe appears once in the executed plan of filter_unseen's
+    result, so its Python cogroup runs once per shard (a union of the
+    definitely-new and confirmed-new branches over one probe ran it twice)."""
+    seen = _hashes(spark, 0, 1000)
+    shards = cuckoo_insert(seen, None, n_store_buckets=8).localCheckpoint()
+    fresh = filter_unseen(cuckoo_probe(_hashes(spark, 500, 1500), shards, 8), seen)
+    assert fresh.count() == 500
+    plan = fresh._jdf.queryExecution().executedPlan().toString()
+    assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+
+
+def test_probe_tags_against_shard_as_read_then_inserts(spark):
+    """One pass tags each candidate against the shard before the batch is
+    inserted, then returns shards holding every candidate; a candidate
+    already present leaves its shard's membership unchanged."""
+    shards = cuckoo_insert(_hashes(spark, 0, 1000), None, n_store_buckets=4)
+    probed = cuckoo_probe(_hashes(spark, 900, 1100), shards, 4)
+    tags = {
+        r["url_hash"]: r["maybe_seen"]
+        for r in probed.filter(F.col("maybe_seen").isNotNull()).collect()
+    }
+    assert sorted(tags) == list(range(900, 1100))
+    assert all(tags[k] for k in range(900, 1000))
+    assert sum(not tags[k] for k in range(1000, 1100)) >= 95
+    updated = shards_of(probed)
+    assert updated.count() == 4
+    assert {r["chain_len"] for r in updated.collect()} == {1}
+    again = cuckoo_probe(_hashes(spark, 0, 1100), updated, 4)
+    assert again.filter(~F.col("maybe_seen")).count() == 0
 
 
 def test_cuckoo_membership_and_delete():

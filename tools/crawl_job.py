@@ -3,8 +3,8 @@ mode: ``spark-submit --py-files <package.zip> tools/crawl_job.py``).
 
 On a cluster, drop ``--master local[*]`` for YARN/K8s; the job only touches
 the SparkSession it is given, the store root, and the deterministic synthetic
-fetch — swap sources/synthetic.make_fetch_udf for a real fetcher UDF to crawl
-real bytes.
+fetch — swap the ``content_for_url``/``fetch_ok`` calls in
+plans/crawl_round.document_pass for a real fetcher to crawl real bytes.
 
 Usage:
     spark-submit --py-files pkg.zip tools/crawl_job.py \
